@@ -8,11 +8,10 @@
 
 Registry order: the first 50 entries are the driver's grading window,
 rotated each round to the 50 stalest queries under the (_staleness,
-q-number) ordering in plans/queries.py (round 15: q138–q186, the
-rounds-8/9 band — the oldest surviving driver rows, and the band
-carrying the round-14 q157/q177 staging changes — plus the q187 wrap
-slot). Import-time asserts plus test pins fail loudly on a half-done
-rotation.
+q-number) ordering in plans/queries.py (round 16: q188–q236, the rest
+of the round-10 band — the oldest surviving graded rows — plus the q10
+wrap slot). Import-time asserts plus test pins fail loudly on a
+half-done rotation.
 
 Per-round additions (all value-oracled from birth; several with
 deliberately INDEPENDENT oracle-side derivations — hex-cast vs instr

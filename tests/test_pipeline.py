@@ -1,0 +1,139 @@
+"""EP1 ``run_pipeline`` and EP2 ``build_marts`` end to end on the
+raw_wide fixture: audit counts, refresh idempotence, the missing-table
+and degraded-sheet paths, and a Spark job budget per run; plus the
+overwrite sink's row count and one-file-per-partition layout."""
+
+from __future__ import annotations
+
+import csv
+import os
+import shutil
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from ursa_major_choir_etl_spark.plans.pipeline import build_marts, run_pipeline
+from ursa_major_choir_etl_spark.sources.io import overwrite_parquet, read_parquet_table
+
+FIXTURE = "tests/fixtures/raw_wide.csv"
+AUDITED = {
+    "dim_chorister": 8,
+    "dim_chorister_assignment": 11,
+    "dim_song": 4,
+    "fact_attendance": 56,
+    "fact_song_time": 12,
+}
+MARTS = {"mart_attendance": 56, "mart_song_rehearsal": 12, "mart_chorister_song": 49}
+TABLES = [*AUDITED, *MARTS, "bad_cells", "etl_log"]
+
+#: Spark jobs one run may launch on the fixture. The write path costs
+#: one job per table (two with a shuffle) and the audit counts come
+#: from the writes; a probe or re-read count() per table breaks these.
+EP1_JOB_BUDGET = 75
+REFRESH_JOB_BUDGET = 25
+
+
+def run_in_group(spark, fn, *args, **kwargs):
+    """(fn's result, number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"test-pipeline-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def snapshot(spark, wh, name) -> list[tuple]:
+    df = read_parquet_table(spark, wh, name)
+    return sorted((tuple(r) for r in df.select(sorted(df.columns)).collect()), key=repr)
+
+
+@pytest.fixture(scope="module")
+def ep1(spark, tmp_path_factory):
+    wh = str(tmp_path_factory.mktemp("ep1") / "warehouse")
+    audit, jobs = run_in_group(spark, run_pipeline, spark, FIXTURE, wh)
+    return wh, audit, jobs
+
+
+def latest_date(spark, wh) -> str:
+    return read_parquet_table(spark, wh, "fact_attendance").select(
+        F.max("rehearsal_date").cast("string")
+    ).first()[0]
+
+
+class TestOverwriteParquet:
+    def test_partitioned_write_returns_rows_and_one_file_per_value(self, spark, tmp_path):
+        df = spark.range(120).repartition(8).select(
+            (F.col("id") % 3).alias("p"), F.col("id").alias("v")
+        )
+        assert overwrite_parquet(df, str(tmp_path), "t", partition_by=["p"]) == 120
+        parts = [d for d in os.listdir(tmp_path / "t") if d.startswith("p=")]
+        assert len(parts) == 3
+        for part in parts:
+            files = [f for f in os.listdir(tmp_path / "t" / part) if f.endswith(".parquet")]
+            assert len(files) == 1, (part, files)
+
+
+class TestRunPipeline:
+    def test_audit_counts_match_the_tables(self, spark, ep1):
+        wh, audit, _ = ep1
+        assert audit["status"] == "success", audit["error_message"]
+        for table, n in AUDITED.items():
+            assert audit[f"rows_{table}"] == n
+            assert read_parquet_table(spark, wh, table).count() == n
+        for table, n in MARTS.items():
+            assert read_parquet_table(spark, wh, table).count() == n
+
+    def test_job_budget(self, ep1):
+        _, _, jobs = ep1
+        assert jobs <= EP1_JOB_BUDGET
+
+    def test_sheet_without_who_degrades_to_empty_tables(self, spark, tmp_path):
+        with open(FIXTURE, newline="", encoding="utf-8") as f:
+            rows = list(csv.reader(f))
+        who = rows[0].index("Who")
+        raw = tmp_path / "no_who.csv"
+        with open(raw, "w", newline="", encoding="utf-8") as f:
+            csv.writer(f).writerows([r[:who] + r[who + 1 :] for r in rows])
+        wh = str(tmp_path / "warehouse")
+
+        audit = run_pipeline(spark, str(raw), wh)
+
+        assert audit["status"] == "success", audit["error_message"]
+        assert all(audit[f"rows_{t}"] == 0 for t in AUDITED)
+        for table in TABLES:
+            df = read_parquet_table(spark, wh, table)
+            assert df.columns, table
+            assert df.count() == (1 if table == "etl_log" else 0), table
+        assert "rehearsal_date" in read_parquet_table(spark, wh, "mart_attendance").columns
+
+
+class TestBuildMarts:
+    def test_latest_date_refresh_is_identical(self, spark, ep1):
+        wh, _, _ = ep1
+        before = {t: snapshot(spark, wh, t) for t in MARTS}
+        _, jobs = run_in_group(spark, build_marts, spark, wh, dates=[latest_date(spark, wh)])
+        assert {t: snapshot(spark, wh, t) for t in MARTS} == before
+        assert jobs <= REFRESH_JOB_BUDGET
+
+    def test_absent_date_refresh_is_a_no_op(self, spark, ep1):
+        wh, _, _ = ep1
+        before = {t: snapshot(spark, wh, t) for t in MARTS}
+        build_marts(spark, wh, dates=["2099-01-01"])
+        after = {t: snapshot(spark, wh, t) for t in MARTS}
+        assert {t: len(rows) for t, rows in after.items()} == MARTS
+        assert after == before
+
+    def test_missing_input_table_is_named(self, spark, ep1, tmp_path):
+        wh, _, _ = ep1
+        copy = str(tmp_path / "warehouse")
+        shutil.copytree(wh, copy)
+        shutil.rmtree(os.path.join(copy, "fact_song_time"))
+        with pytest.raises(RuntimeError, match="Missing required tables") as err:
+            build_marts(spark, copy)
+        assert "fact_song_time" in str(err.value)
+        assert "dim_song" not in str(err.value)

@@ -109,20 +109,20 @@ class TestSynthBlobs:
 
 class TestRound10Registry:
     def test_new_queries_registered_behind_the_window(self, spark):
-        """Round-15 ordering contract: the round-14 window
-        (q01-q09/q114-q137/q283-q299) was driver-graded in round 14
-        (CORRECTNESS_r14.json), so the head is now the stalest-50 SET
-        — q138-q186 (rounds-8/9 band) plus the q187 wrap slot — in
-        ascending q-number order."""
+        """Round-16 ordering contract: the round-15 window
+        (q138-q187) was graded in round 15
+        (CORRECTNESS_r15.json), so the head is now the stalest-50 SET
+        — q188-q236 (the rest of the round-10 band) plus the q10 wrap
+        slot — in ascending q-number order."""
         from ursa_major_choir_etl_spark.plans.queries import ORACLES, QUERIES
 
         ks = list(QUERIES)
         assert len(ks) >= 299
         qnum = lambda k: int(k[1 : k.index("_")])  # noqa: E731
-        head = [k for k in ks if 138 <= qnum(k) <= 187]
+        head = [k for k in ks if 188 <= qnum(k) <= 236 or qnum(k) == 10]
         assert len(head) == 50
         assert ks[:50] == sorted(head, key=qnum)
-        assert [k[:5] for k in ks[:3]] == ["q138_", "q139_", "q140_"]
+        assert [k[:5] for k in ks[:3]] == ["q10_o", "q188_", "q189_"]
         for q in ("q252_", "q253_", "q254_", "q255_", "q256_", "q257_",
                   "q258_", "q259_", "q260_", "q261_", "q262_", "q263_",
                   "q264_", "q265_", "q266_", "q267_", "q268_", "q269_",

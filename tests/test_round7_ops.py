@@ -341,15 +341,12 @@ class TestConsensusPairs:
 
 class TestGradingWindowRotation:
     def test_window_leads_with_never_graded_then_stalest(self):
-        """The driver grades the first 50 registry entries. Round-15
-        policy (ordered by the round-14 VERDICT item 2): the round-14
-        window (q01-q09/q114-q137/q283-q299) went green in
-        CORRECTNESS_r14.json, so the window rotates to the 50
-        now-stalest entries — q138-q186 (the whole rounds-8/9 band,
-        which also puts the round-14 q157/q177 staging changes under
-        driver grading) plus q187 as the one next-stalest wrap slot
-        — in ascending q-number order, filling all 50 slots
-        exactly."""
+        """The grading window is the first 50 registry entries. Round-16
+        policy: the round-15 window (q138-q187) was graded in
+        CORRECTNESS_r15.json, so the window rotates to the 50
+        now-stalest entries — q188-q236 (the rest of the round-10
+        band) plus q10 as the one next-stalest wrap slot — in
+        ascending q-number order, filling all 50 slots exactly."""
         from ursa_major_choir_etl_spark.plans.queries import (
             _head,
             _staleness,
@@ -360,11 +357,11 @@ class TestGradingWindowRotation:
         assert len(window) == 50
         qnum = lambda k: int(k[1 : k.index("_")])  # noqa: E731
         assert window == sorted(_head, key=qnum)
-        assert [qnum(window[0]), qnum(window[-1])] == [138, 187]
-        # the whole rounds-8/9 band is in the window...
-        assert all(138 <= qnum(k) <= 187 for k in window)
-        # ...freshly graded rows (r11-r14 bands) occupy no slot...
-        assert not any(qnum(k) <= 137 or qnum(k) >= 188 for k in window)
+        assert [qnum(window[0]), qnum(window[-1])] == [10, 236]
+        # the rest of the round-10 band is in the window...
+        assert all(188 <= qnum(k) <= 236 or qnum(k) == 10 for k in window)
+        # ...freshly graded rows (r11-r15 bands) occupy no slot...
+        assert not any(11 <= qnum(k) <= 187 or qnum(k) >= 237 for k in window)
         # ...and every window row is from the two stalest bands
         assert all(_staleness(k) <= 1 for k in window)
 

@@ -154,7 +154,8 @@ def build_dim_chorister_assignment(raw: DataFrame, dim_chorister: DataFrame) -> 
     first-seen chorister of that normalized name), or one open-ended
     assignment derived from Tag (C9). A raw row whose normalized name
     has K overrides fans out to K rows — per-raw-row like the reference
-    loop (etl/dim_chorister.py:219-242).
+    loop (etl/dim_chorister.py:219-242). The K5/K6 id lookups come
+    from ``dim_chorister`` (built or read back), not a rebuild from raw.
     """
     if not has_required_columns(raw, ["Tag", "Joined", "Who"]):
         return _empty(raw, DIM_CHORISTER_ASSIGNMENT_COLUMNS)
@@ -163,12 +164,12 @@ def build_dim_chorister_assignment(raw: DataFrame, dim_chorister: DataFrame) -> 
     rows = chorister_rows(raw).withColumn("normalized_name", normalize_name("full_name"))
 
     # K6 with miss-policy "fall back to full_name" (etl/dim_chorister.py:213-216).
-    keys = chorister_id_by_key(build_dim_chorister(raw, run_ts=""))
+    keys = chorister_id_by_key(dim_chorister)
     rows = rows.join(
         F.broadcast(keys), on=["full_name", "joined_date"], how="left"
     ).withColumn("chorister_id", F.coalesce("chorister_id", "full_name"))
 
-    norm_ids = normalized_to_chorister_id(build_dim_chorister(raw, run_ts=""))
+    norm_ids = normalized_to_chorister_id(dim_chorister)
     rows = rows.join(F.broadcast(norm_ids), on="normalized_name", how="left")
 
     overrides = spark.createDataFrame(

@@ -1,9 +1,10 @@
 """End-to-end pipeline (reference EP1: etl/main.py:146-347).
 
 RAW wide sheet -> dims -> facts -> (materialize) -> marts -> alerts ->
-etl_log. Stage boundaries materialize to Parquet, mirroring the
-reference's write-then-re-read through storage (etl/main.py:87-91) —
-which also gives each layer independent restartability at scale.
+etl_log. Each table is one write whose observed row count feeds the
+audit row; only the dims later builders consume (dim_chorister,
+dim_song) are read back from storage, which cuts their lineage and
+gives each layer independent restartability at scale.
 
 E4 run-status capture: any exception marks the run failed, truncates
 the message to 500 chars, and still appends the audit row
@@ -44,9 +45,9 @@ from ursa_major_choir_etl_spark.sources.io import (
     append_parquet,
     overwrite_parquet,
     read_parquet_table,
+    read_tables,
     read_wide_sheet_csv,
     read_wide_sheet_json,
-    validate_tables_exist,
 )
 
 MART_INPUT_TABLES = [
@@ -85,43 +86,34 @@ def run_pipeline(
 
         run_ts = datetime.now(timezone.utc).isoformat(timespec="seconds")
 
-        dim_chorister = build_dim_chorister(raw, run_ts)
-        overwrite_parquet(dim_chorister, warehouse, "dim_chorister")
+        counts["rows_dim_chorister"] = overwrite_parquet(
+            build_dim_chorister(raw, run_ts), warehouse, "dim_chorister"
+        )
         dim_chorister = read_parquet_table(spark, warehouse, "dim_chorister")
-        counts["rows_dim_chorister"] = dim_chorister.count()
-
-        assignment = build_dim_chorister_assignment(raw, dim_chorister)
-        overwrite_parquet(assignment, warehouse, "dim_chorister_assignment")
-        counts["rows_dim_chorister_assignment"] = read_parquet_table(
-            spark, warehouse, "dim_chorister_assignment"
-        ).count()
-
-        dim_song = build_dim_song(raw, run_ts)
-        overwrite_parquet(dim_song, warehouse, "dim_song")
+        counts["rows_dim_chorister_assignment"] = overwrite_parquet(
+            build_dim_chorister_assignment(raw, dim_chorister),
+            warehouse,
+            "dim_chorister_assignment",
+        )
+        counts["rows_dim_song"] = overwrite_parquet(
+            build_dim_song(raw, run_ts), warehouse, "dim_song"
+        )
         dim_song = read_parquet_table(spark, warehouse, "dim_song")
-        counts["rows_dim_song"] = dim_song.count()
 
-        bad_cells = build_bad_cells(raw, run_ts)
-        append_parquet(bad_cells, warehouse, "bad_cells")
+        append_parquet(build_bad_cells(raw, run_ts), warehouse, "bad_cells")
 
-        keys = chorister_id_by_key(dim_chorister)
-        fact_attendance = build_fact_attendance(raw, keys, run_ts)
         # Facts are date-partitioned: with partitionOverwriteMode=dynamic
         # a re-run only rewrites the rehearsal dates it produced — the
         # 100 TB-friendly form of the reference's full clear+write.
-        overwrite_parquet(
-            fact_attendance, warehouse, "fact_attendance",
+        counts["rows_fact_attendance"] = overwrite_parquet(
+            build_fact_attendance(raw, chorister_id_by_key(dim_chorister), run_ts),
+            warehouse,
+            "fact_attendance",
             partition_by=["rehearsal_date"],
         )
-        counts["rows_fact_attendance"] = read_parquet_table(
-            spark, warehouse, "fact_attendance"
-        ).count()
-
-        fact_song_time = build_fact_song_time(raw, dim_song, run_ts)
-        overwrite_parquet(fact_song_time, warehouse, "fact_song_time")
-        counts["rows_fact_song_time"] = read_parquet_table(
-            spark, warehouse, "fact_song_time"
-        ).count()
+        counts["rows_fact_song_time"] = overwrite_parquet(
+            build_fact_song_time(raw, dim_song, run_ts), warehouse, "fact_song_time"
+        )
 
         build_marts(spark, warehouse)
 
@@ -173,14 +165,9 @@ def build_marts(
     incremental path the reference's full-recompute lacks (SURVEY
     §4.2), which is what makes a daily refresh feasible at 100 TB.
     """
-    from pyspark.sql import functions as F
-
-    validate_tables_exist(spark, warehouse, MART_INPUT_TABLES)
-    dim_chorister = read_parquet_table(spark, warehouse, "dim_chorister")
-    assignment = read_parquet_table(spark, warehouse, "dim_chorister_assignment")
-    dim_song = read_parquet_table(spark, warehouse, "dim_song")
-    fact_attendance = read_parquet_table(spark, warehouse, "fact_attendance")
-    fact_song_time = read_parquet_table(spark, warehouse, "fact_song_time")
+    dim_chorister, assignment, dim_song, fact_attendance, fact_song_time = read_tables(
+        spark, warehouse, MART_INPUT_TABLES
+    )
 
     if dates is not None:
         # partition-pruned scan (fact_attendance is partitioned by

@@ -18451,22 +18451,22 @@ QUERIES = {
 }
 
 # The driver grades a prefix window of this registry (50 entries per
-# round). Coverage ledger entering round 15: round 14 graded q01–q09,
-# q114–q137 and q283–q299 (50/50 green, CORRECTNESS_r14.json — all
-# ten streaming stores and the split ops now carry driver rows);
-# round 13 graded q64–q113; round 12 graded q14–q63; round 11 graded
-# q237–q282 plus the wrap q10–q13; round 10 graded q187–q236. The
-# OLDEST surviving rows are now q138–q186 (graded rounds 8/9).
-# Round-15 priority order (the round-14 VERDICT's item 2 ordered this
-# rotation explicitly — it also puts the round-14 q157/q177 staging
-# changes under driver grading):
+# round). Coverage ledger entering round 16: round 15 graded q138–q187
+# (CORRECTNESS_r15.json — the whole rounds-8/9 band plus the q187 wrap
+# slot, including the round-14 q157/q177 staging changes); round 14
+# graded q01–q09, q114–q137 and q283–q299; round 13 graded q64–q113;
+# round 12 graded q14–q63; round 11 graded q237–q282 plus the wrap
+# q10–q13; round 10 graded q187–q236. The OLDEST surviving rows are
+# now q188–q236 (graded round 10).
+# Round-16 priority order:
 #   1. the head: exactly the 50 stalest entries under (_staleness,
-#      q-number) — q138–q186 (the whole rounds-8/9 band) plus q187 as
-#      the one next-stalest wrap slot — in ascending q-number order
+#      q-number) — q188–q236 (the rest of the round-10 band) plus q10
+#      as the one next-stalest wrap slot — in ascending q-number order
 #      (the driver hashes each entry independently; order inside the
 #      window is cosmetic);
-#   2. everything else by grading age (stalest first), so round 16's
-#      window naturally lands on q188–q236 plus the next wrap slot.
+#   2. everything else by grading age (stalest first), so round 17's
+#      window naturally lands on q11–q13 and q237–q282 plus the next
+#      wrap slot.
 # tools/check_oracles.py remains the all-registry local sweep
 # (CORRECTNESS_LOCAL_ALL.txt / _SF01.txt) — re-run at the closing
 # tree, so every row outside the window has same-tree local evidence.
@@ -18479,23 +18479,23 @@ def _qnum(k: str) -> int:
 _names = sorted(QUERIES, key=_qnum)
 # The head is stated EXPLICITLY (not derived from _staleness), so the
 # guard below keeps two independently-written parts that must agree.
-_head = [k for k in _names if 138 <= _qnum(k) <= 187]
+_head = [k for k in _names if 188 <= _qnum(k) <= 236 or _qnum(k) == 10]
 
 
 def _staleness(k: str) -> int:
     """Rounds since last driver grading (0 = stalest)."""
     n = _qnum(k)
-    if 138 <= n <= 186:
-        return 0  # q138–q186: graded rounds 8 AND 9 — the oldest rows
-    if 187 <= n <= 236:
-        return 1  # q187–q236: graded round 10
+    if 188 <= n <= 236:
+        return 0  # q188–q236: graded round 10 — the oldest rows
     if 10 <= n <= 13 or 237 <= n <= 282:
-        return 2  # q10–q13 wrap and q237–q282: graded round 11
+        return 1  # q10–q13 wrap and q237–q282: graded round 11
     if 14 <= n <= 63:
-        return 3  # q14–q63: graded round 12
+        return 2  # q14–q63: graded round 12
     if 64 <= n <= 113:
-        return 4  # q64–q113: graded round 13
-    return 5  # q01–q09, q114–q137, q283–q299: graded round 14 — freshest
+        return 3  # q64–q113: graded round 13
+    if 138 <= n <= 187:
+        return 5  # q138–q187: graded round 15 — freshest
+    return 4  # q01–q09, q114–q137, q283–q299: graded round 14
 
 
 _order = _head + sorted(

@@ -4,9 +4,8 @@ from ursa_major_choir_etl_spark.sources.io import (
     append_parquet,
     overwrite_parquet,
     read_parquet_table,
+    read_tables,
     read_wide_sheet_csv,
-    table_exists,
-    validate_tables_exist,
 )
 
 __all__ = [
@@ -14,6 +13,5 @@ __all__ = [
     "read_parquet_table",
     "overwrite_parquet",
     "append_parquet",
-    "table_exists",
-    "validate_tables_exist",
+    "read_tables",
 ]

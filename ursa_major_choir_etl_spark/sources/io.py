@@ -10,8 +10,7 @@ filesystem. The mapping:
 - S6/S7 idempotent overwrite sink   -> write.mode("overwrite")
 - S8 append sink                    -> write.mode("append")
 - S9 header-on-first-write          -> intrinsic to Parquet schema
-- S11 connectivity probe            -> path existence / limit(0) read
-- S12 existence validation          -> validate_tables_exist
+- S11/S12 existence validation      -> read_tables (one schema read per table)
 
 Stable row ids: duplicate-name disambiguation (K1/K2) and the song
 positional zip (U4) depend on source row order — Spark DataFrames are
@@ -30,7 +29,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 INPUT_ROW_ID = "input_row_id"
@@ -191,17 +192,6 @@ def read_wide_sheet_values(spark: SparkSession, values: list[list]) -> DataFrame
     return spark.createDataFrame(rows, schema)
 
 
-def raw_date_columns(df: DataFrame) -> list[str]:
-    """Positional projection F7: raw header names from column index >= 4
-    (placeholders for unusable headers are skipped, like the reference
-    skips empty header cells)."""
-    return [
-        c
-        for c in df.columns[DATE_COLUMNS_START_INDEX:]
-        if c != INPUT_ROW_ID and not c.startswith(PLACEHOLDER_PREFIX)
-    ]
-
-
 def has_required_columns(df: DataFrame, required: list[str]) -> bool:
     """Missing-column degradation check F8 (reference returns an empty
     table when Tag/Joined/Who are absent, e.g. etl/dim_chorister.py:77-78)."""
@@ -229,42 +219,54 @@ def overwrite_parquet(
     partition_by: list[str] | None = None,
     dynamic: bool = False,
     sort_by: list[str] | None = None,
-) -> None:
-    """Idempotent overwrite sink (S6/S7).
+) -> int:
+    """Idempotent overwrite sink (S6/S7); returns the rows written.
 
-    ``sort_by`` range-repartitions on the keys and sorts within each
-    output file, so every file/row-group covers a NARROW key range and
-    parquet min/max statistics become selective — point/range filters
-    on the sort keys skip whole files at scan time. (A local sort
-    alone cannot do this: round-robin partitions each span the full
-    key range regardless of row order.)
+    The count is an ``Observation`` collected by the write itself: no
+    probe job before the write, no re-read ``count()`` after it.
+    ``partition_by`` hash-repartitions on the partition columns first,
+    so each partition value lands in one file. ``sort_by``
+    range-repartitions on the keys and sorts within each file, so
+    parquet min/max statistics on the keys skip whole files (a local
+    sort alone cannot: round-robin partitions span the full key range).
 
     ``dynamic=False`` (default) is the reference's clear-then-write:
-    the whole table is replaced — correct for full-recompute runs and
-    it cleans up any prior layout. ``dynamic=True`` rewrites only the
+    the whole table is replaced. ``dynamic=True`` rewrites only the
     partitions present in ``df`` (partitionOverwriteMode=dynamic) —
-    the incremental path; requires the table to already have the
-    partitioned layout.
+    the incremental path; the table must already be partitioned.
 
-    Empty frames: a 0-partition/0-row frame under partitionBy would
-    write no files at all, so the re-read could not infer a schema
-    (the F8 degraded tables hit this). Empty data is written
-    unpartitioned as one empty part file — the schema survives, and
-    there are no partitions to preserve anyway.
+    Empty frames are handled after the write, from the observed count.
+    A static partitioned write of 0 rows lands no file, so the table is
+    rewritten as one schema-only unpartitioned file (the F8 degraded
+    tables need a readable schema). A dynamic write of 0 rows touches
+    no partition: it is a no-op.
     """
-    if df.rdd.getNumPartitions() == 0:
-        df = df.repartition(1)
-    if partition_by and df.isEmpty():
-        partition_by = None
-        dynamic = False
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    if partition_by:
+        df = df.repartition(*partition_by)
+    elif sort_by:
+        df = df.repartitionByRange(*sort_by)
     if sort_by:
-        df = df.repartitionByRange(*sort_by).sortWithinPartitions(*sort_by)
+        df = df.sortWithinPartitions(*sort_by)
+    path = os.path.join(warehouse, name)
     writer = df.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic" if dynamic else "static"
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(os.path.join(warehouse, name))
+    writer.parquet(path)
+    try:
+        rows = obs.get["rows"]
+    except Py4JJavaError as e:
+        # The optimizer pruned the plan to an empty relation, so no
+        # metrics row was collected and toPyRow asserts on the empty one.
+        if "java.lang.AssertionError" not in e.java_exception.toString():
+            raise
+        rows = 0
+    if rows == 0 and partition_by and not dynamic:
+        df.sparkSession.createDataFrame([], df.schema).write.mode("overwrite").parquet(path)
+    return rows
 
 
 def compact_partitions(
@@ -463,22 +465,19 @@ def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -
     w.orc(path)
 
 
-def table_exists(spark: SparkSession, warehouse: str, name: str) -> bool:
-    """Existence probe (S11): cheap schema-only read attempt."""
-    try:
-        spark.read.parquet(os.path.join(warehouse, name)).schema
-        return True
-    except Exception:
-        return False
-
-
-def validate_tables_exist(
+def read_tables(
     spark: SparkSession, warehouse: str, names: list[str]
-) -> None:
-    """S12: fail fast if any required upstream table is missing
-    (reference: etl/main.py:79-85)."""
-    missing = [n for n in names if not table_exists(spark, warehouse, n)]
+) -> list[DataFrame]:
+    """Read each named table once, in order; S12: fail fast naming
+    every missing one (reference: etl/main.py:79-85)."""
+    tables, missing = [], []
+    for n in names:
+        try:
+            tables.append(read_parquet_table(spark, warehouse, n))
+        except AnalysisException:
+            missing.append(n)
     if missing:
         raise RuntimeError(
             f"Missing required tables in {warehouse!r}: {', '.join(sorted(missing))}"
         )
+    return tables
