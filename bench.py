@@ -51,7 +51,7 @@ def main() -> None:
 
     from ursa_major_choir_etl_spark.caching import release_staged
     from ursa_major_choir_etl_spark.plans.queries import QUERIES
-    from ursa_major_choir_etl_spark.session import get_spark
+    from ursa_major_choir_etl_spark.session import default_cpus, get_spark
 
     # no console progress bars: the driver tails combined output and
     # bar redraws would crowd the JSON line out of the capture window
@@ -104,7 +104,7 @@ def main() -> None:
     # re-measure baseline for a 32-core run (round-14 VERDICT item 6 —
     # the driver's 8-core run overwrote the 32-core detail and the
     # per-query scaling ratios were lost).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     detail_name = (
         "BENCH_DETAIL.json" if cpus == 32 else f"BENCH_DETAIL_c{cpus}.json"
     )

@@ -1,25 +1,34 @@
 """End-to-end pipeline (reference EP1: etl/main.py:146-347).
 
-RAW wide sheet -> dims -> facts -> (materialize) -> marts -> alerts ->
-etl_log. Each table is one write whose observed row count feeds the
-audit row; only the dims later builders consume (dim_chorister,
-dim_song) are read back from storage, which cuts their lineage and
-gives each layer independent restartability at scale.
+RAW wide sheet -> dims -> facts -> marts -> alerts -> etl_log, in
+waves of independent writes; each wave's writes run as concurrent Spark
+jobs, one driver thread each (``_concurrently``): (1) dim_chorister,
+dim_song, the bad_cells append; (2) read back dim_chorister and
+dim_song, cutting their lineage; (3) dim_chorister_assignment,
+fact_attendance, fact_song_time; (4) the three marts (``build_marts``,
+also EP2); (5) EP3's violators and attendance rate; (6) the etl_log
+audit row, whose counts each write observes as it writes.
 
 E4 run-status capture: any exception marks the run failed, truncates
 the message to 500 chars, and still appends the audit row
-(etl/main.py:295-347).
+(etl/main.py:295-347). A failing write's wave siblings still finish and
+are counted, no later wave starts, and the message is the wave's first
+failure in the reference's table order.
 """
 
 from __future__ import annotations
 
 import argparse
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ursa_major_choir_etl_spark.alerts import format_alert_message, send_telegram_message
+from ursa_major_choir_etl_spark.functions.columns import normalize_date_to_iso
 from ursa_major_choir_etl_spark.operators.analytics import (
     compute_attendance_rate,
     compute_missed_streaks,
@@ -50,12 +59,9 @@ from ursa_major_choir_etl_spark.sources.io import (
     read_wide_sheet_json,
 )
 
+#: Also the tables whose row counts the audit row carries, in its order.
 MART_INPUT_TABLES = [
-    "dim_chorister",
-    "dim_chorister_assignment",
-    "dim_song",
-    "fact_attendance",
-    "fact_song_time",
+    "dim_chorister", "dim_chorister_assignment", "dim_song", "fact_attendance", "fact_song_time"
 ]
 
 
@@ -86,33 +92,27 @@ def run_pipeline(
 
         run_ts = datetime.now(timezone.utc).isoformat(timespec="seconds")
 
-        counts["rows_dim_chorister"] = overwrite_parquet(
-            build_dim_chorister(raw, run_ts), warehouse, "dim_chorister"
+        write = partial(_write, counts, warehouse)
+        _concurrently(
+            spark,
+            write("dim_chorister", lambda: build_dim_chorister(raw, run_ts)),
+            write("dim_song", lambda: build_dim_song(raw, run_ts)),
+            lambda: append_parquet(build_bad_cells(raw, run_ts), warehouse, "bad_cells"),
         )
         dim_chorister = read_parquet_table(spark, warehouse, "dim_chorister")
-        counts["rows_dim_chorister_assignment"] = overwrite_parquet(
-            build_dim_chorister_assignment(raw, dim_chorister),
-            warehouse,
-            "dim_chorister_assignment",
-        )
-        counts["rows_dim_song"] = overwrite_parquet(
-            build_dim_song(raw, run_ts), warehouse, "dim_song"
-        )
         dim_song = read_parquet_table(spark, warehouse, "dim_song")
-
-        append_parquet(build_bad_cells(raw, run_ts), warehouse, "bad_cells")
-
-        # Facts are date-partitioned: with partitionOverwriteMode=dynamic
-        # a re-run only rewrites the rehearsal dates it produced — the
-        # 100 TB-friendly form of the reference's full clear+write.
-        counts["rows_fact_attendance"] = overwrite_parquet(
-            build_fact_attendance(raw, chorister_id_by_key(dim_chorister), run_ts),
-            warehouse,
-            "fact_attendance",
-            partition_by=["rehearsal_date"],
-        )
-        counts["rows_fact_song_time"] = overwrite_parquet(
-            build_fact_song_time(raw, dim_song, run_ts), warehouse, "fact_song_time"
+        _concurrently(
+            spark,
+            write(
+                "dim_chorister_assignment",
+                lambda: build_dim_chorister_assignment(raw, dim_chorister),
+            ),
+            write(
+                "fact_attendance",
+                lambda: build_fact_attendance(raw, chorister_id_by_key(dim_chorister), run_ts),
+                partition_by=["rehearsal_date"],
+            ),
+            write("fact_song_time", lambda: build_fact_song_time(raw, dim_song, run_ts)),
         )
 
         build_marts(spark, warehouse)
@@ -134,20 +134,12 @@ def run_pipeline(
     audit = {
         "run_ts": datetime.now(timezone.utc).isoformat(timespec="seconds"),
         "status": status,
-        "rows_dim_chorister": counts.get("rows_dim_chorister", 0),
-        "rows_dim_chorister_assignment": counts.get(
-            "rows_dim_chorister_assignment", 0
-        ),
-        "rows_dim_song": counts.get("rows_dim_song", 0),
-        "rows_fact_attendance": counts.get("rows_fact_attendance", 0),
-        "rows_fact_song_time": counts.get("rows_fact_song_time", 0),
+        **{f"rows_{t}": counts.get(t, 0) for t in MART_INPUT_TABLES},
         "error_message": error_message,
     }
     audit_df = spark.createDataFrame(
         [tuple(audit.values())],
-        "run_ts string, status string, rows_dim_chorister long,"
-        " rows_dim_chorister_assignment long, rows_dim_song long,"
-        " rows_fact_attendance long, rows_fact_song_time long, error_message string",
+        ", ".join(f"{k} {'long' if k.startswith('rows_') else 'string'}" for k in audit),
     )
     append_parquet(audit_df, warehouse, "etl_log")
     return audit
@@ -155,9 +147,9 @@ def run_pipeline(
 
 def build_marts(
     spark: SparkSession, warehouse: str, dates: list[str] | None = None
-) -> None:
+) -> dict[str, int]:
     """EP2: mart-only refresh from materialized dims/facts
-    (reference: etl/main.py:73-108).
+    (reference: etl/main.py:73-108); returns the rows written per mart.
 
     With ``dates`` (ISO strings), only those rehearsal dates rebuild:
     the fact scan prunes to the named partitions and dynamic partition
@@ -173,10 +165,6 @@ def build_marts(
         # partition-pruned scan (fact_attendance is partitioned by
         # rehearsal_date); fact_song_time carries raw date strings, so
         # it filters on the normalized form.
-        from ursa_major_choir_etl_spark.functions.columns import (
-            normalize_date_to_iso,
-        )
-
         fact_attendance = fact_attendance.filter(
             F.col("rehearsal_date").isin(dates)
         )
@@ -185,30 +173,24 @@ def build_marts(
             F.when(iso != "", iso).otherwise(F.col("rehearsal_date")).isin(dates)
         )
 
+    rows: dict[str, int] = {}
     incremental = dates is not None
-    overwrite_parquet(
-        build_mart_attendance(dim_chorister, assignment, fact_attendance),
-        warehouse,
-        "mart_attendance",
-        partition_by=["rehearsal_date"],
-        dynamic=incremental,
-    )
-    overwrite_parquet(
-        build_mart_song_rehearsal(dim_song, fact_song_time),
-        warehouse,
-        "mart_song_rehearsal",
-        partition_by=["rehearsal_date"],
-        dynamic=incremental,
-    )
-    overwrite_parquet(
-        build_mart_chorister_song(
-            dim_chorister, assignment, dim_song, fact_attendance, fact_song_time
+    write = partial(_write, rows, warehouse, partition_by=["rehearsal_date"], dynamic=incremental)
+    _concurrently(
+        spark,
+        write(
+            "mart_attendance",
+            lambda: build_mart_attendance(dim_chorister, assignment, fact_attendance),
         ),
-        warehouse,
-        "mart_chorister_song",
-        partition_by=["rehearsal_date"],
-        dynamic=incremental,
+        write("mart_song_rehearsal", lambda: build_mart_song_rehearsal(dim_song, fact_song_time)),
+        write(
+            "mart_chorister_song",
+            lambda: build_mart_chorister_song(
+                dim_chorister, assignment, dim_song, fact_attendance, fact_song_time
+            ),
+        ),
     )
+    return rows
 
 
 def _run_alerts(
@@ -229,20 +211,20 @@ def _run_alerts(
     deterministic run-to-run regardless of partitioning.
     """
     mart = read_parquet_table(spark, warehouse, "mart_attendance")
-    violators_df = compute_missed_streaks(mart, lookback_weeks, streak_threshold)
     dim_order = read_parquet_table(spark, warehouse, "dim_chorister").select(
         "chorister_id", "input_row_id"
     )
-    violators = [
-        r.asDict()
-        for r in violators_df.join(
+
+    def collect_violators() -> list[dict]:
+        violators = compute_missed_streaks(mart, lookback_weeks, streak_threshold).join(
             F.broadcast(dim_order), on="chorister_id", how="left"
         )
-        .orderBy(F.asc_nulls_last("input_row_id"), "chorister_id")
-        .drop("input_row_id")
-        .collect()
-    ]
-    rate = compute_attendance_rate(mart, lookback_weeks)
+        ordered = violators.orderBy(F.asc_nulls_last("input_row_id"), "chorister_id")
+        return [r.asDict() for r in ordered.drop("input_row_id").collect()]
+
+    violators, rate = _concurrently(
+        spark, collect_violators, lambda: compute_attendance_rate(mart, lookback_weeks)
+    )
     msg = format_alert_message(violators, lookback_weeks, streak_threshold, rate)
     print("--- Alert message ---")
     print(msg)
@@ -252,6 +234,24 @@ def _run_alerts(
     else:
         send_telegram_message(telegram_token, telegram_chat_id, msg)
     return msg
+
+
+def _write(counts: dict[str, int], warehouse: str, table: str, build, **kwargs):
+    """A thunk: overwrite ``table`` with ``build()``, record its rows in ``counts``."""
+
+    def write() -> None:
+        counts[table] = overwrite_parquet(build(), warehouse, table, **kwargs)
+
+    return write
+
+
+def _concurrently(spark: SparkSession, *thunks):
+    """Run each thunk on its own driver thread, which inherits the
+    caller's job group and description; once all have finished, return
+    their results in order or re-raise the first failure in that order."""
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    return [f.result() for f in futures]
 
 
 def main() -> None:

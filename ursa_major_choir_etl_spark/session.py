@@ -21,7 +21,18 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else 3/4 of physical RAM, capped at 16g."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(ram_mb * 3 // 4, 16 * 1024)}m"
 
 
 def get_spark(
@@ -33,9 +44,9 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     On a real cluster ``master`` comes from spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS]``.
+    default to ``local[N]`` with N from :func:`default_cpus`.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
@@ -45,7 +56,7 @@ def get_spark(
     conf = {
         # --- shuffle sizing -------------------------------------------------
         "spark.sql.shuffle.partitions": str(
-            shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+            shuffle_partitions or cpus
         ),
         # --- adaptive execution --------------------------------------------
         "spark.sql.adaptive.enabled": "true",
@@ -81,12 +92,13 @@ def get_spark(
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         # quieter local runs
         "spark.ui.enabled": "false",
-        # 16g heap: the bench/test harness runs ~200 query executions
-        # in ONE local-mode JVM (driver == executors), and iterative
-        # queries with eager localCheckpoints intermittently paid
-        # multi-second full-GC pauses at 8g (q55 spiking 5s -> 28s
-        # warm). The host has 128 GiB; headroom is cheaper than pauses.
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        # Up to a 16g heap: the bench/test harness runs ~200 query
+        # executions in ONE local-mode JVM (driver == executors), and
+        # iterative queries with eager localCheckpoints intermittently
+        # paid multi-second full-GC pauses at 8g (q55 spiking 5s -> 28s
+        # warm). The default takes 3/4 of physical RAM up to that, so a
+        # smaller host is not over-committed.
+        "spark.driver.memory": default_driver_memory(),
     }
     if extra_conf:
         conf.update(extra_conf)
