@@ -19,9 +19,10 @@ round its whole per-query PERF table).
 
 The full-fidelity detail (full query names, cold AND warm runs,
 3-decimal precision) is written to BENCH_DETAIL.json at the repo root
-for round-over-round diffing (BENCH_DETAIL_c{N}.json when
-$SPARK_GRAFT_CPUS != 32, so a low-core scaling probe cannot overwrite
-the 32-core record).
+for round-over-round diffing when the run uses the host's own core
+count ($SPARK_GRAFT_CPUS unset, or equal to it); a run pinned to any
+other count writes BENCH_DETAIL_c{N}.json, so a scaling probe cannot
+overwrite the budget record.
 
 Each query runs twice in the same warmed session: the first run pays
 one-time costs (file listing, plan compilation, codegen), the second
@@ -99,14 +100,17 @@ def main() -> None:
     # re-measure below (round 7: the official run posted q131 at
     # 5.33s where a clean replication measured ~2s — a one-off
     # scheduler/GC artifact that then cost a round of investigation).
-    # Low-core runs (the driver's scaling probe) read and write their
-    # OWN detail file, BENCH_DETAIL_c{N}.json: an 8-core run is not a
-    # re-measure baseline for a 32-core run (round-14 VERDICT item 6 —
-    # the driver's 8-core run overwrote the 32-core detail and the
-    # per-query scaling ratios were lost).
+    # The budget record, BENCH_DETAIL.json, is a run at the host's own
+    # core count. A run pinned to any other count (a scaling probe)
+    # reads and writes its OWN detail file, BENCH_DETAIL_c{N}.json: an
+    # 8-core run is not a re-measure baseline for a 32-core run
+    # (round-14 VERDICT item 6 — an 8-core run overwrote the 32-core
+    # detail and the per-query scaling ratios were lost).
     cpus = default_cpus()
     detail_name = (
-        "BENCH_DETAIL.json" if cpus == 32 else f"BENCH_DETAIL_c{cpus}.json"
+        "BENCH_DETAIL.json"
+        if cpus == len(os.sched_getaffinity(0))
+        else f"BENCH_DETAIL_c{cpus}.json"
     )
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), detail_name

@@ -14,7 +14,9 @@ incremental_dedup_probe docstring).
 
 :func:`materialize_once` is that layout in miniature: build the
 DataFrame once, write it as parquet under the warehouse, and hand
-every caller a plain parquet scan. Properties:
+every caller a plain parquet scan (``sources.io.scan_parquet``, which
+takes the schema from the artifact's footer, so building a plan over
+an existing artifact runs no Spark job). Properties:
 
 - **Keyed by inputs, version, and parameters.** The key embeds an
   fingerprint of the source files (size + mtime), so a regenerated
@@ -44,6 +46,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ursa_major_choir_etl_spark.sources.io import scan_parquet
+
 # (storage root, key) pairs verified present on disk during THIS
 # process — skips the stat calls on repeat reads inside one bench/test
 # session. The root is part of the cache key because the storage root
@@ -52,14 +56,6 @@ from pyspark.sql import DataFrame, SparkSession
 # key verified under one root suppress the existence check — and
 # therefore the build — under another.
 _VERIFIED: set[tuple[str, str]] = set()
-
-# Inferred schema per verified (root, key) (round 13): the first read
-# of an artifact runs Spark's footer-inference job; every later read
-# in the process passes the cached schema so plan CONSTRUCTION over an
-# existing artifact runs zero jobs — with 16 tokens_table consumers
-# (and the pair/IVF/LSH artifacts), that is one small job saved per
-# consumer per session, and it makes explain-only callers truly free.
-_SCHEMAS: dict[tuple[str, str], "object"] = {}
 
 
 def base_dir() -> str:
@@ -139,12 +135,7 @@ def materialize_once(
             shutil.rmtree(tmp, ignore_errors=True)
         _prune_superseded(root, prefix, key)
     _VERIFIED.add(cache_key)
-    cached = _SCHEMAS.get(cache_key)
-    if cached is not None:
-        return spark.read.schema(cached).parquet(path)
-    out = spark.read.parquet(path)
-    _SCHEMAS[cache_key] = out.schema
-    return out
+    return scan_parquet(spark, path)
 
 
 def _prune_superseded(root: str, prefix: str, keep_key: str) -> None:

@@ -13,13 +13,16 @@ avoided):
 - argmin ties break on the smaller centroid id.
 
 Spark shape (the 1000-executor story): centroids are model state —
-k x dims bigints — collected to the driver each round and rebroadcast
-as an 8-row table; assignment is a broadcast nested-loop over that
-tiny table (never a shuffle of the corpus); the centroid update is one
-posexplode + map-side-combined groupBy(cid, dim) shuffle of at most
-k x dims cells per executor. Per iteration: exactly one small shuffle.
-This is the canonical Spark k-means layout (pyspark.ml's KMeans does
-the same collect-and-broadcast of cluster centers per step).
+k x dims bigints — collected to the driver between rounds and
+rebroadcast as an inline k-row VALUES table (a LocalRelation, so the
+broadcast runs no job); assignment is a broadcast nested-loop over
+that tiny table (never a shuffle of the corpus); the centroid update
+is one posexplode + map-side-combined groupBy(cid, dim) shuffle of at
+most k x dims cells per executor. ``iters`` rounds collect ``iters -
+1`` updates: the last round's assignment is the result, and a caller
+that needs the final centroids aggregates them lazily from it. This
+is the canonical Spark k-means layout (pyspark.ml's KMeans does the
+same collect-and-broadcast of cluster centers per step).
 """
 
 from __future__ import annotations
@@ -37,6 +40,24 @@ def _sq_dist(a, b):
     )
 
 
+def _centroid_table(spark: SparkSession, cents: list[tuple[int, list[int]]]) -> DataFrame:
+    """``cents`` as an inline VALUES table (cid bigint, c array<bigint>).
+
+    Spark plans it as a LocalRelation, which broadcasts without a job;
+    ``createDataFrame`` over a Python list would parallelize an RDD and
+    run one to collect it again."""
+    if not cents:
+        return spark.createDataFrame([], "cid bigint, c array<bigint>")
+
+    def lit(v) -> str:
+        return "NULL" if v is None else f"{v}L"
+
+    rows = ", ".join(
+        f"({cid}L, array({', '.join(lit(v) for v in c)}))" for cid, c in cents
+    )
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t(cid, c)")
+
+
 def _lloyd_rounds(
     spark: SparkSession,
     emb: DataFrame,
@@ -45,13 +66,14 @@ def _lloyd_rounds(
     scale: int,
     id_col: str,
     vec_col: str,
-):
-    """Shared Lloyd driver loop: returns (assigned, cents) after
-    ``iters`` rounds — ``assigned`` is (id, cid, _xi) of the FINAL
-    assignment, ``cents`` the post-update centroid list. Both the
-    stats query (kmeans_lloyd_integer) and the semantic-dedup
-    assignment consumer (kmeans_assignments_integer) replay the exact
-    same deterministic rounds, so their SQL oracles share CTEs too."""
+) -> DataFrame:
+    """Shared Lloyd driver loop: returns (id, cid, _xi), the assignment
+    of round ``iters``. After the seed collect, each earlier round
+    collects its centroid update; the last round's assignment stays
+    lazy. Both the stats query (kmeans_lloyd_integer) and the
+    semantic-dedup assignment consumer (kmeans_assignments_integer)
+    replay the exact same deterministic rounds, so their SQL oracles
+    share CTEs too."""
     from ursa_major_choir_etl_spark.caching import stage
 
     xi_df = stage(
@@ -69,11 +91,8 @@ def _lloyd_rounds(
     ]
 
     assigned = None
-    for _ in range(iters):
-        cents_df = spark.createDataFrame(
-            cents, schema="cid bigint, c array<bigint>"
-        )
-        scored = xi_df.crossJoin(F.broadcast(cents_df)).withColumn(
+    for it in range(iters):
+        scored = xi_df.crossJoin(F.broadcast(_centroid_table(spark, cents))).withColumn(
             "_d", _sq_dist(F.col("_xi"), F.col("c"))
         )
         best = F.min(
@@ -88,6 +107,8 @@ def _lloyd_rounds(
             .agg(best)
             .select(F.col(id_col), F.col("m.cid").alias("cid"), F.col("m.xi").alias("_xi"))
         )
+        if it == iters - 1:
+            break
         sums = (
             assigned.select("cid", F.posexplode("_xi").alias("pos", "xd"))
             .groupBy("cid", "pos")
@@ -107,7 +128,7 @@ def _lloyd_rounds(
             for cid, old in cents
         ]
 
-    return assigned, cents
+    return assigned
 
 
 def kmeans_lloyd_integer(
@@ -125,23 +146,17 @@ def kmeans_lloyd_integer(
     Output: (cid, n_members, sum_vec_id, c_0..c_{out_dims-1}) — member
     count and exact id-sum of the FINAL assignment, plus the first
     ``out_dims`` coordinates of the centroid recomputed from it (all
-    bigint; empty clusters keep their previous centroid and emit no
-    stats row, mirroring the oracle's group-by).
+    bigint; empty clusters emit no stats row, mirroring the oracle's
+    group-by). The centroid is the same truncating mean the driver loop
+    collects between rounds, aggregated here inside the stats group-by,
+    so the last update runs under the caller's action.
     """
-    assigned, cents = _lloyd_rounds(spark, emb, k, iters, scale, id_col, vec_col)
-    final_c = {cid: v for cid, v in cents}
-    stats = assigned.groupBy("cid").agg(
+    assigned = _lloyd_rounds(spark, emb, k, iters, scale, id_col, vec_col)
+    return assigned.groupBy("cid").agg(
         F.count("*").alias("n_members"),
         F.sum(id_col).alias("sum_vec_id"),
+        *[F.expr(f"sum(_xi[{d}]) DIV count(*)").alias(f"c_{d}") for d in range(out_dims)],
     )
-    cent_rows = [
-        (cid, *final_c[cid][:out_dims]) for cid, _ in cents
-    ]
-    cent_df = spark.createDataFrame(
-        cent_rows,
-        schema="cid bigint, " + ", ".join(f"c_{d} bigint" for d in range(out_dims)),
-    )
-    return stats.join(F.broadcast(cent_df), "cid")
 
 
 def kmeans_assignments_integer(
@@ -156,7 +171,7 @@ def kmeans_assignments_integer(
     """Final-round cluster ASSIGNMENTS (id, cid) — the clustering
     stage of SemDeDup-style semantic dedup, bit-replayable in SQL via
     the same deterministic rounds as kmeans_lloyd_integer."""
-    assigned, _ = _lloyd_rounds(spark, emb, k, iters, scale, id_col, vec_col)
+    assigned = _lloyd_rounds(spark, emb, k, iters, scale, id_col, vec_col)
     return assigned.select(F.col(id_col), F.col("cid"))
 
 

@@ -44,9 +44,23 @@ def widen_if_narrow(df: DataFrame, min_parallelism: int | None = None) -> DataFr
         if min_parallelism is not None
         else df.sparkSession.sparkContext.defaultParallelism
     )
-    if target and df.rdd.getNumPartitions() < target:
+    if target and split_count(df) < target:
         df = df.repartition(target)
     return df
+
+
+def split_count(df: DataFrame) -> int:
+    """Partitions of ``df``'s scan stage, without running a job.
+
+    A plan with no exchange is not adaptive, and its executed plan's RDD
+    has the scan's split count (``df.rdd`` would build a Python RDD for
+    the same number). An adaptive plan only knows its final partition
+    count after running its stages, so it keeps the ``df.rdd`` probe.
+    """
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return df.rdd.getNumPartitions()
+    return plan.execute().getNumPartitions()
 
 
 def tokens(text: Column | str) -> Column:

@@ -294,6 +294,7 @@ from ursa_major_choir_etl_spark.operators import (
 from ursa_major_choir_etl_spark.operators import marts as marts_ops
 from ursa_major_choir_etl_spark.functions import columns
 from ursa_major_choir_etl_spark.plans import oracles as osql
+from ursa_major_choir_etl_spark.sources.io import scan_parquet
 
 
 def _probe_emb_dims_at(sf_dir: str) -> int | None:
@@ -376,7 +377,7 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = scan_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     # Nanosecond parquet timestamps surface as long (see session.py);
     # truncate to micros — exact integer DIV, no float precision loss.
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
@@ -483,9 +484,7 @@ def tokens_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         _TOKENS_VERSION,
         [os.path.join(sf_dir, "documents.parquet")],
-        lambda: text.widen_if_narrow(
-            T(spark, sf_dir, "documents")
-        ).select(
+        lambda: T(spark, sf_dir, "documents").select(
             "doc_id",
             "lang",
             "source",

@@ -87,8 +87,8 @@ def get_spark(
         # engine robust to either encoding.)
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
         # --- nanosecond-precision parquet timestamps read as long nanos ------
-        # (Spark has no TIMESTAMP(NANOS); sources/io.read_parquet_table
-        # converts to micros explicitly.)
+        # (Spark has no TIMESTAMP(NANOS); plans/queries.T converts the
+        # events table's ts to micros explicitly.)
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         # quieter local runs
         "spark.ui.enabled": "false",

@@ -4,13 +4,13 @@ The reference's storage is a Google Sheet reached over HTTPS
 (reference: etl/gsheets.py); ours is Parquet on a distributed
 filesystem. The mapping:
 
-- S2/S3 range/table scan            -> spark.read.csv / spark.read.parquet
+- S2/S3 range/table scan            -> spark.read.csv / scan_parquet
 - S4 catalog listing                -> filesystem / catalog listing
 - S5 create-if-not-exists           -> implicit on first Parquet write
 - S6/S7 idempotent overwrite sink   -> write.mode("overwrite")
 - S8 append sink                    -> write.mode("append")
 - S9 header-on-first-write          -> intrinsic to Parquet schema
-- S11/S12 existence validation      -> read_tables (one schema read per table)
+- S11/S12 existence validation      -> read_tables (one footer read per table)
 
 Stable row ids: duplicate-name disambiguation (K1/K2) and the song
 positional zip (U4) depend on source row order — Spark DataFrames are
@@ -198,18 +198,142 @@ def has_required_columns(df: DataFrame, required: list[str]) -> bool:
     return set(required) <= set(df.columns)
 
 
+#: Footer key under which Spark stores the exact schema of the rows it wrote.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def scan_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
+    """Scan a Parquet file or table directory; planning runs no Spark job.
+
+    A bare ``spark.read.parquet`` infers the schema with a footer-reading
+    job. Here the driver reads one footer (:func:`_footer_schema`) and
+    passes the schema explicitly. Hive-partitioned directories,
+    ``merge_schema=True``, missing paths and any footer whose types may
+    infer differently keep Spark's own inference (and its job); a
+    missing path still raises ``AnalysisException``.
+    """
+    reader = spark.read
+    if merge_schema:
+        return reader.option("mergeSchema", "true").parquet(path)
+    schema = _footer_schema(spark, path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The schema Spark would infer for ``path``, from one footer, or None.
+
+    Spark-written files carry their schema as JSON in the footer, and
+    Spark's inference returns exactly that. For other writers the Arrow
+    schema is mapped type by type, and None is returned for any type
+    (nanosecond timestamps, unsigned ints, dictionaries, field ids, ...)
+    whose mapping is not certain to equal Spark's. Only local paths are
+    read; None also covers partitioned or missing paths, summary files
+    and session confs that change inference.
+    """
+    first = _first_data_file(path)
+    if first is None or spark.conf.get("spark.sql.parquet.mergeSchema") == "true":
+        return None
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    try:
+        meta = pq.read_metadata(first)
+    except (OSError, ValueError):  # not a parquet footer: Spark reports it
+        return None
+    spark_json = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+    if spark_json is not None:
+        try:
+            return StructType.fromJson(json.loads(spark_json))
+        except (ValueError, KeyError, TypeError):
+            return None
+    if spark.conf.get("spark.sql.parquet.binaryAsString") == "true":
+        return None
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    return _arrow_struct(meta.schema.to_arrow_schema(), ntz)
+
+
+def _first_data_file(path: str) -> str | None:
+    """The file Spark's non-merging inference reads: ``path`` itself, or
+    the first data file of a flat directory (hidden names skipped as
+    Spark's file index does). None for subdirectories, summary files
+    and paths that are not local."""
+    if os.path.isfile(path):
+        return path
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for entry in sorted(os.listdir(path)):
+        if entry in ("_metadata", "_common_metadata"):
+            return None
+        if entry.startswith(".") or (entry.startswith("_") and "=" not in entry):
+            continue
+        full = os.path.join(path, entry)
+        if not os.path.isfile(full):
+            return None
+        files.append(full)
+    return files[0] if files else None
+
+
+def _arrow_struct(schema, ntz: bool):
+    """Map Arrow fields to a Spark StructType, or None (see _footer_schema)."""
+    from pyspark.sql.types import StructField, StructType
+
+    fields = []
+    for f in schema:
+        t = _arrow_type(f.type, ntz)
+        if t is None or b"PARQUET:field_id" in (f.metadata or {}):
+            return None
+        fields.append(StructField(f.name, t, True))
+    return StructType(fields)
+
+
+def _arrow_type(t, ntz: bool):
+    import pyarrow as pa
+    import pyarrow.types as pat
+    from pyspark.sql import types as st
+
+    primitive = {
+        pa.bool_(): st.BooleanType(), pa.int8(): st.ByteType(),
+        pa.int16(): st.ShortType(), pa.int32(): st.IntegerType(),
+        pa.int64(): st.LongType(), pa.float32(): st.FloatType(),
+        pa.float64(): st.DoubleType(), pa.string(): st.StringType(),
+        pa.large_string(): st.StringType(), pa.binary(): st.BinaryType(),
+        pa.date32(): st.DateType(),
+    }
+    if t in primitive:
+        return primitive[t]
+    if pat.is_timestamp(t):
+        # NANOS reads as bigint under nanosAsLong (or fails without it)
+        if t.unit == "ns":
+            return None
+        return st.TimestampNTZType() if ntz and t.tz is None else st.TimestampType()
+    if pat.is_decimal128(t):
+        return st.DecimalType(t.precision, t.scale)
+    if pat.is_list(t) or pat.is_large_list(t):
+        elem = _arrow_type(t.value_type, ntz)
+        return None if elem is None else st.ArrayType(elem, True)
+    if pat.is_map(t):
+        key, item = _arrow_type(t.key_type, ntz), _arrow_type(t.item_type, ntz)
+        return None if key is None or item is None else st.MapType(key, item, True)
+    if pat.is_struct(t):
+        return _arrow_struct(t, ntz)
+    return None
+
+
 def read_parquet_table(
     spark: SparkSession, warehouse: str, name: str, merge_schema: bool = False
 ) -> DataFrame:
-    """Read a warehouse table. ``merge_schema=True`` unions the
-    schemas of all files (schema evolution: an appended batch that
-    ADDED a column still reads as one table, old files null-filled).
-    Off by default: merging footers costs a file-listing pass per
-    read, and a table of homogeneous files shouldn't pay it."""
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(os.path.join(warehouse, name))
+    """Read a warehouse table through :func:`scan_parquet`.
+    ``merge_schema=True`` unions the schemas of all files (schema
+    evolution: an appended batch that ADDED a column still reads as
+    one table, old files null-filled). Off by default: merging footers
+    costs a file-listing pass per read, and a table of homogeneous
+    files shouldn't pay it."""
+    return scan_parquet(spark, os.path.join(warehouse, name), merge_schema)
 
 
 def overwrite_parquet(
