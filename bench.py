@@ -50,7 +50,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    from ursa_major_choir_etl_spark.caching import release_staged
+    from ursa_major_choir_etl_spark.caching import release_all
     from ursa_major_choir_etl_spark.plans.queries import QUERIES
     from ursa_major_choir_etl_spark.session import default_cpus, get_spark
 
@@ -89,10 +89,7 @@ def main() -> None:
             except Exception:
                 pass  # warm-up is best-effort; the timed run reports errors
             try:
-                release_staged()
-                spark.catalog.clearCache()
-                for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                    jrdd.unpersist(False)
+                release_all(spark)
             except Exception:
                 pass
 
@@ -152,10 +149,7 @@ def main() -> None:
             errors[f"artifact:{aname}"] = f"{type(exc).__name__}: {exc}"[:200]
             failed_artifacts.append(aname)
         try:
-            release_staged()
-            spark.catalog.clearCache()
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist(False)
+            release_all(spark)
         except Exception:
             pass
 
@@ -190,16 +184,11 @@ def main() -> None:
         # Drop this query's persisted intermediates (several operators
         # persist staging tables and never unpersist — by design, the
         # caller owns lifetime). Without this, ~200 executions
-        # accumulate cached blocks and later queries pay their GC.
-        # clearCache only covers the SQL cache manager; the iterative
-        # operators' localCheckpoint RDD blocks sit OUTSIDE it and
-        # linger until the nondeterministic ContextCleaner runs —
-        # the source of intermittent multi-second spikes mid-suite.
+        # accumulate cached blocks and later queries pay their GC;
+        # the lingering localCheckpoint RDDs were the source of
+        # intermittent multi-second spikes mid-suite.
         try:
-            release_staged()
-            spark.catalog.clearCache()
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist(False)
+            release_all(spark)
         except Exception:
             pass  # cleanup is best-effort; never kill the run for it
 

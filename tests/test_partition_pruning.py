@@ -1,6 +1,7 @@
 """Partition-layout pruning levers, asserted against physical plans:
 
-- hive-style partitioned writes with bounded file counts;
+- hive-style partitioned writes (``overwrite_parquet(partition_by=...)``),
+  one file per partition value;
 - static partition pruning (PartitionFilters from a literal filter);
 - dynamic partition pruning (dim-filter join prunes the fact scan at
   runtime via a dynamicpruningexpression subquery);
@@ -19,10 +20,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from ursa_major_choir_etl_spark.sources.io import overwrite_parquet
 from ursa_major_choir_etl_spark.sources.partitioning import (
     partition_values,
     runtime_bloom_filters,
-    write_hive_partitioned,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -34,12 +35,12 @@ def plan_of(df) -> str:
 
 @pytest.fixture(scope="module")
 def part_orders(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("warehouse") / "orders_by_year")
+    wh = str(tmp_path_factory.mktemp("warehouse"))
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").withColumn(
         "o_year", F.year("o_orderdate")
     )
-    write_hive_partitioned(orders, path, ["o_year"])
-    return path
+    overwrite_parquet(orders, wh, "orders_by_year", partition_by=["o_year"])
+    return os.path.join(wh, "orders_by_year")
 
 
 @pytest.fixture(scope="module")
@@ -78,7 +79,7 @@ class TestHiveLayout:
                 for f in os.listdir(os.path.join(part_orders, d))
                 if f.endswith(".parquet")
             ]
-            assert len(files) == 1  # files_per_partition=1, no small-file bomb
+            assert len(files) == 1  # one file per value, no small-file bomb
 
     def test_roundtrip_rowcount(self, spark, part_orders):
         n = spark.read.parquet(part_orders).count()

@@ -171,6 +171,30 @@ class TestBuildMarts:
         assert {t: len(rows) for t, rows in after.items()} == MARTS
         assert after == before
 
+    def test_unparseable_padded_date_refresh_rewrites_its_partition(self, spark, tmp_path):
+        # The song mart writes the unparseable header "TBD " as the
+        # trimmed partition TBD, so a refresh of TBD must find its facts.
+        raw = tmp_path / "padded.csv"
+        with open(raw, "w", newline="", encoding="utf-8") as f:
+            csv.writer(f).writerows(
+                [
+                    ["Tag", "Joined", "tgid", "Who", "16.06.24", "TBD "],
+                    ["Alto", "16.06.24", "", "Полина Калач", "2", "2"],
+                    ["Song", "", "", "Калинка", "30", "45"],
+                    ["Song", "", "", "Катюша", "", "20"],
+                ]
+            )
+        wh = str(tmp_path / "warehouse")
+        assert run_pipeline(spark, str(raw), wh)["status"] == "success"
+        before = snapshot(spark, wh, "mart_song_rehearsal")
+        mart = read_parquet_table(spark, wh, "mart_song_rehearsal")
+        assert mart.filter(F.col("rehearsal_date") == "TBD").count() == 2
+
+        rows = build_marts(spark, wh, dates=["TBD"])
+
+        assert rows["mart_song_rehearsal"] == 2
+        assert snapshot(spark, wh, "mart_song_rehearsal") == before
+
     def test_missing_input_table_is_named(self, spark, ep1, tmp_path):
         wh, *_ = ep1
         copy = str(tmp_path / "warehouse")

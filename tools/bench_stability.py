@@ -41,7 +41,7 @@ def main() -> None:
                 sys.argv[sys.argv.index(a) + 1]
             )
 
-    from ursa_major_choir_etl_spark.caching import release_staged
+    from ursa_major_choir_etl_spark.caching import release_all
     from ursa_major_choir_etl_spark.plans.queries import QUERIES
     from ursa_major_choir_etl_spark.session import get_spark
 
@@ -59,10 +59,7 @@ def main() -> None:
 
     def cleanup() -> None:
         try:
-            release_staged()
-            spark.catalog.clearCache()
-            for jr in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jr.unpersist(False)
+            release_all(spark)
         except Exception:
             pass
 

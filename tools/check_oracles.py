@@ -68,6 +68,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     filters = sys.argv[2:]
 
+    from ursa_major_choir_etl_spark.caching import release_all
     from ursa_major_choir_etl_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -107,13 +108,11 @@ def main() -> None:
         spark_rows = [tuple(r) for r in df.collect()]
         t_spark = time.time() - t0
         # Bounded memory across the all-registry sweep: operators
-        # register staging persists (caching.stage) and this session
-        # runs every query — release per query, same as bench.py.
+        # register staging persists (caching.stage) and the iterative
+        # ones localCheckpoint RDDs, and this session runs every query
+        # — release per query, same as bench.py.
         try:
-            from ursa_major_choir_etl_spark.caching import release_staged
-
-            release_staged()
-            spark.catalog.clearCache()
+            release_all(spark)
         except Exception:
             pass
 

@@ -40,7 +40,7 @@ def main() -> None:
     if args.runs < 1:
         ap.error("--runs must be >= 1")
 
-    from ursa_major_choir_etl_spark.caching import release_staged
+    from ursa_major_choir_etl_spark.caching import release_all
     from ursa_major_choir_etl_spark.plans.queries import (
         ARTIFACT_BUILDERS,
         QUERIES,
@@ -67,8 +67,7 @@ def main() -> None:
                 builder(spark, args.sf)
             except Exception as exc:  # noqa: BLE001
                 print(f"!! artifact {aname}: {exc}")
-        release_staged()
-        spark.catalog.clearCache()
+        release_all(spark)
 
     # Mirror bench.py's untimed sf0.001 warm-up for the TARGET queries:
     # drives their whole-stage-codegen classes through Janino + C2 so
@@ -85,12 +84,7 @@ def main() -> None:
                     ).mode("overwrite").save()
                 except Exception:
                     pass
-                release_staged()
-                spark.catalog.clearCache()
-                for jrdd in (
-                    spark.sparkContext._jsc.getPersistentRDDs().values()
-                ):
-                    jrdd.unpersist(False)
+                release_all(spark)
 
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -111,20 +105,14 @@ def main() -> None:
             with open(path, "w") as f:
                 f.write(f"# {name} @ {args.sf} ({args.tag})\n")
                 f.write(buf.getvalue())
-            release_staged()
-            spark.catalog.clearCache()
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist(False)
+            release_all(spark)
         times = []
         for i in range(args.runs):
             spark.sparkContext.setJobDescription(f"{name} run {i}")
             t0 = time.time()
             fn(spark, args.sf).write.format("noop").mode("overwrite").save()
             times.append(round(time.time() - t0, 3))
-            release_staged()
-            spark.catalog.clearCache()
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist(False)
+            release_all(spark)
         spark.sparkContext.setJobDescription(None)
         # 'first' (not 'cold'): the sf0.001 JIT sweep above already
         # compiled this query's codegen classes.

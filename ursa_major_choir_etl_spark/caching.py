@@ -52,3 +52,17 @@ def release_staged(blocking: bool = False) -> int:
         except Exception:  # session already stopped — nothing to free
             pass
     return n
+
+
+def release_all(spark) -> int:
+    """Free everything a query may have left cached between runs of a
+    long-lived session: the staged frames (:func:`release_staged`),
+    the SQL cache manager (``catalog.clearCache``), and the persisted
+    RDDs outside it — the iterative operators' localCheckpoint blocks,
+    which otherwise linger until the nondeterministic ContextCleaner
+    runs. Returns how many staged frames were released."""
+    n = release_staged()
+    spark.catalog.clearCache()
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        jrdd.unpersist(False)
+    return n

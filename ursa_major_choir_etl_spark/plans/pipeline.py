@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ursa_major_choir_etl_spark.alerts import format_alert_message, send_telegram_message
-from ursa_major_choir_etl_spark.functions.columns import normalize_date_to_iso
 from ursa_major_choir_etl_spark.operators.analytics import (
     compute_attendance_rate,
     compute_missed_streaks,
@@ -44,6 +43,7 @@ from ursa_major_choir_etl_spark.operators.facts import (
     build_fact_song_time,
 )
 from ursa_major_choir_etl_spark.operators.marts import (
+    _norm_or_raw,
     build_mart_attendance,
     build_mart_chorister_song,
     build_mart_song_rehearsal,
@@ -162,15 +162,16 @@ def build_marts(
     )
 
     if dates is not None:
-        # partition-pruned scan (fact_attendance is partitioned by
-        # rehearsal_date); fact_song_time carries raw date strings, so
-        # it filters on the normalized form.
+        # Partition-pruned scan: fact_attendance is partitioned by its
+        # parsed DATE, compared as a string so that a date no header
+        # parses to (one the song mart keeps raw) matches no partition
+        # instead of failing the ANSI cast. fact_song_time carries raw
+        # date strings, so it filters on the date the song mart writes.
         fact_attendance = fact_attendance.filter(
-            F.col("rehearsal_date").isin(dates)
+            F.col("rehearsal_date").cast("string").isin(dates)
         )
-        iso = normalize_date_to_iso("rehearsal_date")
         fact_song_time = fact_song_time.filter(
-            F.when(iso != "", iso).otherwise(F.col("rehearsal_date")).isin(dates)
+            _norm_or_raw("rehearsal_date").isin(dates)
         )
 
     rows: dict[str, int] = {}

@@ -17,16 +17,18 @@ features that cut it without touching query code are:
   scan filter, dropping most probe rows BEFORE the shuffle. This is
   the row-level analogue of DPP for non-partition join keys.
 
-Both are plan rewrites, not API calls — this module's job is (a) to
-write layouts that make them fire (hive-style ``partitionBy`` dirs
-with controlled file counts) and (b) to expose the conf toggles with
+Both are plan rewrites, not API calls. The layout that makes them
+fire — hive-style ``col=value`` dirs, one file per partition value —
+is written by ``sources.io.overwrite_parquet(partition_by=...)`` (with
+``dynamic=True`` for an incremental partition rewrite). This module
+lists a layout's partition values and exposes the conf toggles with
 thresholds suitable for testing. ``tests/test_partition_pruning.py``
 asserts the pruning expressions actually appear in the physical plan.
 
 Reference parity: the reference's warehouse is a flat Sheets tab per
 table (reference: etl/gsheets.py:73-94) — it has no partition concept;
-this is the Spark-native layout layer its clear-then-write sink maps
-onto at scale (see also sources/io.py write_table dynamic overwrite).
+``overwrite_parquet`` is the Spark-native form its clear-then-write
+sink maps onto at scale.
 """
 
 from __future__ import annotations
@@ -34,44 +36,6 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def write_hive_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    files_per_partition: int = 1,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as hive-style partitioned parquet
-    (``path/col=value/..``) with a bounded file count per partition.
-
-    The repartition on the partition columns is what keeps this sane at
-    scale: without it, every input task writes a file into every
-    partition dir it touches (tasks x partitions small files — the
-    classic metadata bomb). With it, each partition's rows land on
-    ``files_per_partition`` tasks, so the dir has that many files.
-
-    A salt column spreads one partition across several writer tasks
-    when a single partition is itself too big for one task (skewed
-    partitions at 100 TB); it never reaches the output schema because
-    ``repartition`` consumes it.
-    """
-    parts = [F.col(c) for c in partition_cols]
-    if files_per_partition > 1:
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns]),
-            F.lit(files_per_partition),
-        )
-        out = df.repartition(*parts, salt)
-    else:
-        out = df.repartition(*parts)
-    (
-        out.write.mode(mode)
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
 
 
 def partition_values(spark: SparkSession, path: str) -> DataFrame:

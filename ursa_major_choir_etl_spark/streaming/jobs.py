@@ -11,15 +11,40 @@ Design rules for the 100 TB/unbounded target:
 - custom stateful logic (the trailing-miss streak) uses
   ``applyInPandasWithState`` with explicit state schema + timeout.
 
-Each job returns the writeStream-ready DataFrame; callers pick sink
-and trigger. Tests drive them with a file source over the events
-parquet and a memory sink.
+The operator jobs return a streaming DataFrame; callers pick sink and
+trigger (tests drain them into a memory sink with ``run_to_memory``).
+The ``streaming_*_sink`` jobs start their own query: all of them
+drain the available input (availableNow trigger) through a
+foreachBatch function, and each store sink writes every micro-batch
+through ``sources.io.overwrite_parquet`` as a dynamic partition
+overwrite of that batch's own partition. The stores come in two
+layouts:
+
+- **batch-keyed** (quantile, CMS, fuzzy-probe, card, rollup,
+  decayed-engagement): partition ``batch_id=<id>`` holds that batch's
+  mergeable partial state; the ``read_*`` view merges all partitions.
+  A replayed batch overwrites its own partition, so an additive merge
+  never double-counts.
+- **generation** (CC-label, HLL, presence): each batch merges the
+  newest generation below its own id with its input and writes the
+  result as ``gen=<batch_id>``; readers take the max generation and
+  superseded generations are pruned.
+
+``streaming_upsert_sink`` is the one keyed-table sink: its batches
+MERGE into the table through ``sources.io.merge_upsert``.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ursa_major_choir_etl_spark.sources.io import (
+    overwrite_parquet,
+    read_parquet_table,
+)
 
 
 def read_event_stream(
@@ -213,6 +238,35 @@ def streaming_interval_join(
     return l.join(r, cond, "inner")
 
 
+def _drain(stream_df: DataFrame, batch_fn, checkpoint_dir: str | None):
+    """Start ``stream_df`` with ``batch_fn(batch_df, batch_id)`` as its
+    foreachBatch function, draining all available input
+    (availableNow). The checkpoint, when given, keeps batch ids stable
+    across restarts: that is what makes a replayed batch overwrite its
+    own store partition. Returns the started query."""
+    writer = stream_df.writeStream.foreachBatch(batch_fn).trigger(
+        availableNow=True
+    )
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
+
+
+def _publish(
+    df: DataFrame, batch_id: int, warehouse: str, name: str, key: str = "batch_id"
+) -> None:
+    """Write one micro-batch's rows as the store partition
+    ``<key>=<batch_id>`` (dynamic overwrite: every other partition is
+    left as it is, and a replay replaces its own)."""
+    overwrite_parquet(
+        df.withColumn(key, F.lit(int(batch_id))),
+        warehouse,
+        name,
+        partition_by=[key],
+        dynamic=True,
+    )
+
+
 def streaming_upsert_sink(
     stream_df: DataFrame,
     warehouse: str,
@@ -258,11 +312,9 @@ def streaming_upsert_sink(
     from ursa_major_choir_etl_spark.sources import io as sio
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
-
         from pyspark.sql import Window as _W
 
-        path = _os.path.join(warehouse, name)
+        path = os.path.join(warehouse, name)
         if seq_col is not None:
             w = _W.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
             best = (
@@ -270,7 +322,7 @@ def streaming_upsert_sink(
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-            if not _os.path.exists(path):
+            if not os.path.exists(path):
                 writer = best.write.mode("overwrite")
                 if partition_col is not None:
                     writer = writer.partitionBy(partition_col)
@@ -327,7 +379,7 @@ def streaming_upsert_sink(
                 if winners is not None:
                     winners.unpersist()
             return
-        if not _os.path.exists(path):
+        if not os.path.exists(path):
             writer = batch_df.write.mode("overwrite")
             if partition_col is not None:
                 writer = writer.partitionBy(partition_col)
@@ -346,12 +398,7 @@ def streaming_upsert_sink(
             partition_col=partition_col,
         )
 
-    writer = stream_df.writeStream.foreachBatch(merge_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _drain(stream_df, merge_batch, checkpoint_dir)
 
 
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
@@ -456,39 +503,22 @@ def streaming_quantile_sketch_sink(
     batch replaces its previous rows instead of double-counting, and
     the checkpoint guarantees batch ids are stable.
     """
+    from ursa_major_choir_etl_spark.operators.sketches import (
+        log_quantile_sketch,
+    )
 
     def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
+        _publish(log_quantile_sketch(batch_df, col), batch_id, warehouse, name)
 
-        from ursa_major_choir_etl_spark.operators.sketches import (
-            log_quantile_sketch,
-        )
-
-        (
-            log_quantile_sketch(batch_df, col)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(_os.path.join(warehouse, name))
-        )
-
-    writer = stream_df.writeStream.foreachBatch(sketch_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _drain(stream_df, sketch_batch, checkpoint_dir)
 
 
 def read_quantile_sketch_store(spark, warehouse: str, name: str) -> DataFrame:
     """Merged view of a streaming sketch store: per-batch sketch rows
     sum into the corpus sketch (the additive-merge identity, tested
     batch-side), ready for log_quantile_estimates."""
-    import os as _os
-
     return (
-        spark.read.parquet(_os.path.join(warehouse, name))
+        read_parquet_table(spark, warehouse, name)
         .groupBy("bucket_lo")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -588,36 +618,21 @@ def streaming_cms_sink(
     rescanning the stream.
     """
 
+    from ursa_major_choir_etl_spark.operators.sketches import cm_sketch
+
     def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
+        sketch = cm_sketch(batch_df, col, depth=depth, width=width)
+        _publish(sketch, batch_id, warehouse, name)
 
-        from ursa_major_choir_etl_spark.operators.sketches import cm_sketch
-
-        (
-            cm_sketch(batch_df, col, depth=depth, width=width)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(_os.path.join(warehouse, name))
-        )
-
-    writer = stream_df.writeStream.foreachBatch(sketch_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _drain(stream_df, sketch_batch, checkpoint_dir)
 
 
 def read_cms_store(spark, warehouse: str, name: str) -> DataFrame:
     """Merged view of a streaming CMS store: per-batch cells sum into
     the corpus sketch (cell-wise additivity), ready for
     sketches.cm_estimate."""
-    import os as _os
-
     return (
-        spark.read.parquet(_os.path.join(warehouse, name))
+        read_parquet_table(spark, warehouse, name)
         .groupBy("d", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -693,46 +708,31 @@ def streaming_fuzzy_dedup_sink(
     Store rows: (new_id, corpus_id, jaccard, batch_id).
     """
 
+    from ursa_major_choir_etl_spark.caching import release_staged
+    from ursa_major_choir_etl_spark.operators.dedup import (
+        incremental_jaccard_probe,
+    )
+
     def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
-
-        from ursa_major_choir_etl_spark.caching import release_staged
-        from ursa_major_choir_etl_spark.operators.dedup import (
-            incremental_jaccard_probe,
+        verdicts = incremental_jaccard_probe(
+            batch_df,
+            corpus,
+            id_col=id_col,
+            text_col=text_col,
+            n=n,
+            threshold=threshold,
         )
-
-        (
-            incremental_jaccard_probe(
-                batch_df,
-                corpus,
-                id_col=id_col,
-                text_col=text_col,
-                n=n,
-                threshold=threshold,
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(_os.path.join(warehouse, name))
-        )
+        _publish(verdicts, batch_id, warehouse, name)
         release_staged()  # the probe stages shard/corpus arrays per batch
 
-    writer = stream_docs.writeStream.foreachBatch(probe_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _drain(stream_docs, probe_batch, checkpoint_dir)
 
 
 def read_fuzzy_probe_store(spark, warehouse: str, name: str) -> DataFrame:
     """All fuzzy-dedup verdicts accumulated by
     streaming_fuzzy_dedup_sink: (new_id, corpus_id, jaccard,
     batch_id)."""
-    import os as _os
-
-    return spark.read.parquet(_os.path.join(warehouse, name))
+    return read_parquet_table(spark, warehouse, name)
 
 
 def streaming_outlier_gate(
@@ -795,23 +795,9 @@ def streaming_card_sink(
     from ursa_major_choir_etl_spark.operators.quality import card_batch_row
 
     def card_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
+        _publish(card_batch_row(batch_df), batch_id, warehouse, name)
 
-        (
-            card_batch_row(batch_df)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(_os.path.join(warehouse, name))
-        )
-
-    writer = stream_docs.writeStream.foreachBatch(card_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _drain(stream_docs, card_batch, checkpoint_dir)
 
 
 def read_card_store(spark, warehouse: str, name: str) -> DataFrame:
@@ -824,9 +810,7 @@ def read_card_store(spark, warehouse: str, name: str) -> DataFrame:
     usual HLL error bound (~1.6%/sqrt(2^lgk/2)) — the drain test pins
     them within 5% of the exact batch truth. Output mirrors
     quality.dataset_card's tall metric table."""
-    import os as _os
-
-    merged = spark.read.parquet(_os.path.join(warehouse, name)).agg(
+    merged = read_parquet_table(spark, warehouse, name).agg(
         F.sum("n_docs").alias("n_docs"),
         F.sum("n_tokens").alias("n_tokens"),
         F.sum("n_en").alias("n_en"),
@@ -891,29 +875,15 @@ def streaming_rollup_sink(
     """
 
     def rollup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
-
-        (
-            batch_df.groupBy(*group_cols)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(value_col).alias("sum_v"),
-                F.min(value_col).alias("min_v"),
-                F.max(value_col).alias("max_v"),
-            )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(_os.path.join(warehouse, name))
+        partial = batch_df.groupBy(*group_cols).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(value_col).alias("sum_v"),
+            F.min(value_col).alias("min_v"),
+            F.max(value_col).alias("max_v"),
         )
+        _publish(partial, batch_id, warehouse, name)
 
-    writer = stream_df.writeStream.foreachBatch(rollup_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _drain(stream_df, rollup_batch, checkpoint_dir)
 
 
 def read_rollup_store(
@@ -921,10 +891,8 @@ def read_rollup_store(
 ) -> DataFrame:
     """Merged rollup over a streaming rollup store: the algebraic
     combine of the per-batch partial states."""
-    import os as _os
-
     return (
-        spark.read.parquet(_os.path.join(warehouse, name))
+        read_parquet_table(spark, warehouse, name)
         .groupBy(*group_cols)
         .agg(
             F.sum("n").alias("n"),
@@ -955,9 +923,7 @@ def streaming_decayed_engagement_sink(
     (types x weeks)-sized, not batch-sized."""
 
     def engagement_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
-
-        (
+        weekly = (
             batch_df.select(
                 "event_type",
                 F.expr(
@@ -970,19 +936,10 @@ def streaming_decayed_engagement_sink(
                 F.count(F.lit(1)).alias("n"),
                 F.sum("cents").alias("sum_cents"),
             )
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(_os.path.join(warehouse, name))
         )
+        _publish(weekly, batch_id, warehouse, name)
 
-    writer = stream_df.writeStream.foreachBatch(engagement_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _drain(stream_df, engagement_batch, checkpoint_dir)
 
 
 def read_decayed_engagement(spark, warehouse: str, name: str) -> DataFrame:
@@ -996,10 +953,8 @@ def read_decayed_engagement(spark, warehouse: str, name: str) -> DataFrame:
     computation that uses the same bucket ages — the drive test pins
     that equality — but up to one halving apart from q207, whose age
     is measured from the exact max timestamp."""
-    import os as _os
-
     weekly = (
-        spark.read.parquet(_os.path.join(warehouse, name))
+        read_parquet_table(spark, warehouse, name)
         .groupBy("event_type", "epoch_week")
         .agg(
             F.sum("n").alias("n"),
@@ -1046,26 +1001,49 @@ def _hadoop_path_exists(spark, path: str) -> bool:
     return hpath.getFileSystem(hconf).exists(hpath)
 
 
-def _read_store_parquet(spark, path: str, row_schema: str) -> DataFrame:
-    """spark.read.parquet for a generation store, with ONE narrowed
-    degradation: a store directory that exists but holds ZERO data
-    files raises UNABLE_TO_INFER_SCHEMA — and that state arises
-    legitimately: a micro-batch whose merged output is empty (e.g.
-    an all-filtered first batch) dynamic-partition-writes no
+def _read_generation(
+    spark, warehouse: str, name: str, row_schema: str, before_gen: int | None
+) -> DataFrame:
+    """Rows of the newest generation of a gen-partitioned store
+    (optionally the newest BELOW ``before_gen`` — the replay-safe view
+    a merging batch reads), as the ``row_schema`` columns. The shared
+    reader of the CC-label, HLL and presence stores.
+
+    "Store not created yet" is the ONLY state that may read as empty.
+    A transient read failure (permissions, corrupt footer) must
+    propagate and fail the batch — swallowing it here would let the
+    merge proceed from empty state and publish a new max generation
+    that permanently erases history (round-9 ADVICE, medium).
+    Existence resolves through the Hadoop FileSystem API, not os.path
+    — an hdfs:/s3a:/file: warehouse would make a local stat
+    always-False and silently read the store as empty, the exact
+    history-erasing mode this gate closes (round-10 ADVICE).
+
+    One narrowed degradation: a store directory that exists but holds
+    ZERO data files raises UNABLE_TO_INFER_SCHEMA — and that state
+    arises legitimately: a micro-batch whose merged output is empty
+    (e.g. an all-filtered first batch) dynamic-partition-writes no
     partition directories at all, leaving just the bare store dir.
-    That is "no generations yet", the same as path-absent, so it
-    resolves to an empty frame carrying ``row_schema`` PLUS the gen
-    partition column (downstream before_gen filters and max(gen)
-    must still analyze). Any other analysis/read error (corrupt
-    files included) PROPAGATES — the history-erasure rule stands."""
+    That is "no generations yet", the same as path-absent. Any other
+    analysis/read error (corrupt files included) PROPAGATES."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
+    empty = spark.createDataFrame([], row_schema)
+    path = os.path.join(warehouse, name)
+    if not _hadoop_path_exists(spark, path):
+        return empty
     try:
-        return spark.read.parquet(path)
+        df = spark.read.parquet(path)
     except AnalysisException as exc:
-        if "UNABLE_TO_INFER_SCHEMA" in str(exc):
-            return spark.createDataFrame([], f"{row_schema}, gen long")
-        raise
+        if "UNABLE_TO_INFER_SCHEMA" not in str(exc):
+            raise
+        return empty
+    if before_gen is not None:
+        df = df.filter(F.col("gen") < before_gen)
+    mx = df.agg(F.max("gen")).first()[0]
+    if mx is None:
+        return empty
+    return df.filter(F.col("gen") == mx).select(*empty.columns)
 
 
 def _prune_generations(spark, path: str, batch_id: int) -> None:
@@ -1119,6 +1097,18 @@ def _prune_generations(spark, path: str, batch_id: int) -> None:
         pass
 
 
+def _publish_generation(
+    df: DataFrame, batch_id: int, warehouse: str, name: str
+) -> None:
+    """Publish ``df`` as generation ``gen=<batch_id>``, then prune the
+    superseded generations — EXCEPT the one this batch just consumed
+    (see _prune_generations)."""
+    _publish(df, batch_id, warehouse, name, key="gen")
+    _prune_generations(
+        df.sparkSession, os.path.join(warehouse, name), int(batch_id)
+    )
+
+
 def streaming_cc_label_sink(
     stream_pairs: DataFrame,
     warehouse: str,
@@ -1150,37 +1140,18 @@ def streaming_cc_label_sink(
     per shard drop, not per-second triggers), in exchange for every
     downstream report staying a single parquet scan. Superseded
     generations are pruned after each successful publish."""
+    from ursa_major_choir_etl_spark.operators.dedup import merge_cc_labels
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
-
-        from ursa_major_choir_etl_spark.operators.dedup import merge_cc_labels
-
-        spark_l = batch_df.sparkSession
-        path = _os.path.join(warehouse, name)
         prev = read_cc_label_store(
-            spark_l, warehouse, name, before_gen=int(batch_id)
+            batch_df.sparkSession, warehouse, name, before_gen=int(batch_id)
         )
         merged = merge_cc_labels(
             prev, batch_df.select(F.col(id_a), F.col(id_b))
         )
-        (
-            merged.withColumn("gen", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen")
-            .parquet(path)
-        )
-        # Prune superseded generations — EXCEPT the one this batch
-        # just consumed — see _prune_generations.
-        _prune_generations(spark_l, path, int(batch_id))
+        _publish_generation(merged, batch_id, warehouse, name)
 
-    writer = stream_pairs.writeStream.foreachBatch(merge_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _drain(stream_pairs, merge_batch, checkpoint_dir)
 
 
 def read_cc_label_store(
@@ -1190,30 +1161,10 @@ def read_cc_label_store(
     (node, component) rows of the newest generation (optionally the
     newest BELOW ``before_gen`` — the replay-safe view a merging batch
     reads). Missing/empty store -> empty frame with the label
-    schema."""
-    import os as _os
-
-    row_schema = "node long, component long"
-    empty = spark.createDataFrame([], row_schema)
-    path = _os.path.join(warehouse, name)
-    # "Store not created yet" is the ONLY state that may read as
-    # empty labels. A transient read failure (permissions, corrupt
-    # footer) must propagate and fail the batch — swallowing it here
-    # would let the merge proceed from empty labels and publish a new
-    # max generation that permanently erases history (round-9 ADVICE,
-    # medium). Existence resolves through the Hadoop FileSystem API,
-    # not os.path — an hdfs:/s3a:/file: warehouse would make a local
-    # stat always-False and silently read the store as empty, the
-    # exact history-erasing mode this gate closes (round-10 ADVICE).
-    if not _hadoop_path_exists(spark, path):
-        return empty
-    df = _read_store_parquet(spark, path, row_schema)
-    if before_gen is not None:
-        df = df.filter(F.col("gen") < before_gen)
-    mx = df.agg(F.max("gen")).first()[0]
-    if mx is None:
-        return empty
-    return df.filter(F.col("gen") == mx).select("node", "component")
+    schema; real read failures propagate (see _read_generation)."""
+    return _read_generation(
+        spark, warehouse, name, "node long, component long", before_gen
+    )
 
 
 def streaming_hll_register_sink(
@@ -1245,12 +1196,8 @@ def streaming_hll_register_sink(
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
-
-        spark_l = batch_df.sparkSession
-        path = _os.path.join(warehouse, name)
         prev = read_hll_register_store(
-            spark_l, warehouse, name, before_gen=int(batch_id)
+            batch_df.sparkSession, warehouse, name, before_gen=int(batch_id)
         )
         fresh = portable_hll_registers(
             batch_df, group_col, value_col
@@ -1264,21 +1211,9 @@ def streaming_hll_register_sink(
             .groupBy("grp", "bkt")
             .agg(F.max("r").alias("r"))
         )
-        (
-            merged.withColumn("gen", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen")
-            .parquet(path)
-        )
-        _prune_generations(spark_l, path, int(batch_id))
+        _publish_generation(merged, batch_id, warehouse, name)
 
-    writer = stream.writeStream.foreachBatch(merge_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _drain(stream, merge_batch, checkpoint_dir)
 
 
 def read_hll_register_store(
@@ -1287,22 +1222,11 @@ def read_hll_register_store(
     """Current (grp, bkt, r) registers accumulated by
     streaming_hll_register_sink — newest generation, optionally the
     newest BELOW ``before_gen`` (the replay-safe merge view). Missing
-    store -> empty registers; real read failures propagate (the
-    history-erasure rule the CC label reader documents)."""
-    import os as _os
-
-    row_schema = "grp string, bkt int, r int"
-    empty = spark.createDataFrame([], row_schema)
-    path = _os.path.join(warehouse, name)
-    if not _hadoop_path_exists(spark, path):
-        return empty
-    df = _read_store_parquet(spark, path, row_schema)
-    if before_gen is not None:
-        df = df.filter(F.col("gen") < before_gen)
-    mx = df.agg(F.max("gen")).first()[0]
-    if mx is None:
-        return empty
-    return df.filter(F.col("gen") == mx).select("grp", "bkt", "r")
+    store -> empty registers; real read failures propagate (see
+    _read_generation)."""
+    return _read_generation(
+        spark, warehouse, name, "grp string, bkt int, r int", before_gen
+    )
 
 
 def hll_store_estimates(regs: DataFrame) -> DataFrame:
@@ -1354,12 +1278,8 @@ def streaming_presence_bitmap_sink(
     from ursa_major_choir_etl_spark.operators.bitmaps import MAX_POSITION
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os as _os
-
-        spark_l = batch_df.sparkSession
-        path = _os.path.join(warehouse, name)
         prev = read_presence_bitmap_store(
-            spark_l,
+            batch_df.sparkSession,
             warehouse,
             name,
             before_gen=int(batch_id),
@@ -1380,21 +1300,9 @@ def streaming_presence_bitmap_sink(
             .groupBy("k")
             .agg(F.expr("bit_or(bitmap)").alias("bitmap"))
         )
-        (
-            merged.withColumn("gen", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen")
-            .parquet(path)
-        )
-        _prune_generations(spark_l, path, int(batch_id))
+        _publish_generation(merged, batch_id, warehouse, name)
 
-    writer = stream.writeStream.foreachBatch(merge_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _drain(stream, merge_batch, checkpoint_dir)
 
 
 def read_presence_bitmap_store(
@@ -1407,8 +1315,8 @@ def read_presence_bitmap_store(
     """Current (k, bitmap) rows accumulated by
     streaming_presence_bitmap_sink — newest generation, optionally
     the newest BELOW ``before_gen`` (the replay-safe merge view).
-    Missing store -> empty; real read failures propagate (the
-    history-erasure rule the CC label reader documents).
+    Missing store -> empty; real read failures propagate (see
+    _read_generation).
 
     ``key_type`` sets the key column type of the empty frame a
     missing store resolves to. The sink passes the stream's own key
@@ -1417,17 +1325,6 @@ def read_presence_bitmap_store(
     keys to string (round-11 ADVICE) — batch-pack parity then holds
     for any key type. An existing store reads with its stored key
     type regardless."""
-    import os as _os
-
-    row_schema = f"k {key_type}, bitmap long"
-    empty = spark.createDataFrame([], row_schema)
-    path = _os.path.join(warehouse, name)
-    if not _hadoop_path_exists(spark, path):
-        return empty
-    df = _read_store_parquet(spark, path, row_schema)
-    if before_gen is not None:
-        df = df.filter(F.col("gen") < before_gen)
-    mx = df.agg(F.max("gen")).first()[0]
-    if mx is None:
-        return empty
-    return df.filter(F.col("gen") == mx).select("k", "bitmap")
+    return _read_generation(
+        spark, warehouse, name, f"k {key_type}, bitmap long", before_gen
+    )
