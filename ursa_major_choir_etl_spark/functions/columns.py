@@ -128,15 +128,6 @@ def normalize_date_to_iso(c: Column | str) -> Column:
     return F.coalesce(out, F.lit(""))
 
 
-def normalize_date(c: Column | str) -> Column:
-    """Same as :func:`normalize_date_to_iso` but typed ``date`` (null on fail).
-
-    Our engine keeps real DateType end-to-end (SURVEY §7.4 item 4); the
-    ISO-string variant exists for byte-level parity tests only.
-    """
-    return F.try_to_date(F.nullif(normalize_date_to_iso(c), F.lit("")))
-
-
 def parse_decimal_comma(c: Column | str) -> Column:
     """Lenient numeric parse accepting comma decimals: ``"2,5"`` -> 2.5.
 

@@ -13,13 +13,55 @@ for the 100 TB design target and are safe on local[N]:
   the partitions a run produced, not the whole dataset.
 - Arrow on: any unavoidable Python boundary (pandas UDFs in the
   extension operators) moves batches, not rows.
+
+Startup: a fresh JVM spends most of its start loading and verifying
+classes from Spark's ~290 jars, so the driver JVM launches with a JDK
+dynamic class-data-sharing (AppCDS) archive,
+``<checkout>/.spark-cds/<key>.jsa``, once the checkout has one. The key
+hashes the JVM (``java.home`` and its ``release`` file), the Spark jars
+(names and sizes) and the conf dir. A ready archive is mapped
+(``-XX:SharedArchiveFile``). The first launch in a checkout only leaves
+a ``<key>.seen`` marker, so a job that runs once in a fresh checkout
+launches as before and pays nothing. The next launch finds the marker
+and dumps the archive when its JVM exits (``-XX:ArchiveClassesAtExit``);
+that process is slower for its whole life and about 20 s longer at
+exit. A file at the key path without the dynamic-archive magic is a
+dump still running, refused or killed: it is deleted once (a
+``<key>.failed`` marker records that) and the cycle starts over; after
+that, the launch stays plain until ``.spark-cds`` is deleted. CDS
+refuses a non-empty directory on the classpath, so a launch with an
+archive points ``SPARK_CONF_DIR`` at the empty ``.spark-cds/conf``, and
+only when ``$SPARK_HOME/conf`` holds nothing but ``*.template`` files.
+A conf dir or classpath from the environment, extra jars, an unwritable
+directory or an already running JVM mean today's launch. The JVM
+ignores a stale archive, but one cut short with its header intact (an
+interrupted copy of a checkout) crashes it at start: if the Java
+gateway dies at start, ``rm -rf .spark-cds``.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+#: The class-data-sharing archives and their empty conf dir, at the
+#: root of the checkout the package is imported from.
+CDS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".spark-cds")
+#: A dynamic archive's header starts with 0xf00baba8, little-endian. The
+#: JVM writes the header last, so a dump killed midway has none.
+_CDS_MAGIC = (0xF00BABA8).to_bytes(4, "little")
+#: Mutes CDS logging only: a dump warns once per class it skips (signed
+#: jars, failed verification, generated accessors), ~1,200 lines.
+_CDS_QUIET = "-Xlog:cds*=off"
+#: Confs and environment variables that change the driver's classpath,
+#: which the archive records (a conf dir on it must be empty to dump).
+_CLASSPATH_CONFS = ("spark.jars", "spark.jars.packages", "spark.driver.extraClassPath")
+_CLASSPATH_ENV = ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 
 
 def default_cpus() -> int:
@@ -33,6 +75,68 @@ def default_driver_memory() -> str:
         return os.environ["SPARK_GRAFT_DRIVER_MEM"]
     ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     return f"{min(ram_mb * 3 // 4, 16 * 1024)}m"
+
+
+def _java_home() -> str:
+    """The JVM ``spark-class`` runs: ``$JAVA_HOME``, else ``java`` on PATH."""
+    if os.environ.get("JAVA_HOME"):
+        return os.path.realpath(os.environ["JAVA_HOME"])
+    java = shutil.which("java")
+    if java is None:
+        raise FileNotFoundError("java")
+    return os.path.dirname(os.path.dirname(os.path.realpath(java)))
+
+
+def _cds_key(java_home: str, jars_dir: str, conf_dir: str) -> str:
+    """Hash of what a class-data-sharing archive is only valid for."""
+    h = hashlib.sha256(f"{java_home}\n{conf_dir}\n".encode())
+    with open(os.path.join(java_home, "release"), "rb") as f:
+        h.update(f.read())
+    for e in sorted(os.scandir(jars_dir), key=lambda e: e.name):
+        h.update(f"{e.name}\t{e.stat().st_size}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def _cds_option(conf: dict[str, str]) -> str | None:
+    """The driver JVM option that maps this checkout's archive or dumps
+    it at exit, or None for a plain launch.
+    """
+    if (
+        any(v in os.environ for v in _CLASSPATH_ENV)
+        or os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell") != "pyspark-shell"
+        or any(k in conf for k in _CLASSPATH_CONFS)
+    ):
+        return None
+    try:
+        spark_home = _find_spark_home()
+        default_conf = os.path.join(spark_home, "conf")
+        if os.path.isdir(default_conf) and not all(
+            n.endswith(".template") for n in os.listdir(default_conf)
+        ):
+            return None
+        conf_dir = os.path.join(CDS_DIR, "conf")
+        os.makedirs(conf_dir, exist_ok=True)
+        if os.listdir(conf_dir):
+            return None
+        key = _cds_key(_java_home(), os.path.join(spark_home, "jars"), conf_dir)
+        archive, seen = (os.path.join(CDS_DIR, key + ext) for ext in (".jsa", ".seen"))
+        if os.path.exists(archive):
+            with open(archive, "rb") as f:
+                if f.read(4) == _CDS_MAGIC:
+                    return f'-XX:SharedArchiveFile="{archive}" {_CDS_QUIET}'
+            # dropped once; after a second failure the launch stays plain
+            open(os.path.join(CDS_DIR, f"{key}.failed"), "x").close()
+            os.unlink(archive)
+        try:
+            os.unlink(seen)  # claims the dump: one concurrent launch wins
+        except FileNotFoundError:
+            open(seen, "x").close()
+            return None
+        # while this JVM lives, other launches find a file without magic
+        open(archive, "x").close()
+    except OSError:
+        return None
+    return f'-XX:ArchiveClassesAtExit="{archive}" {_CDS_QUIET}'
 
 
 def get_spark(
@@ -102,8 +206,19 @@ def get_spark(
     }
     if extra_conf:
         conf.update(extra_conf)
+    # class-data sharing only matters when this call launches the JVM
+    cds = None if SparkContext._gateway else _cds_option(conf)
+    if cds:
+        opts = "spark.driver.extraJavaOptions"
+        conf[opts] = f"{conf[opts]} {cds}" if conf.get(opts) else cds
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    if cds:
+        os.environ["SPARK_CONF_DIR"] = os.path.join(CDS_DIR, "conf")
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if cds:
+            del os.environ["SPARK_CONF_DIR"]
     spark.sparkContext.setLogLevel("WARN")
     return spark
