@@ -201,15 +201,6 @@ class TestMultimodal:
         assert rows[1]["n_bytes"] == len("the cat sat on the mat".encode())
         assert rows[1]["width"] == rows[2]["width"]  # same payload -> same meta
 
-    def test_frame_sample_fanout(self, spark):
-        big = spark.createDataFrame(
-            [(1, "x" * 2500)], "doc_id long, text string"
-        )
-        frames = multimodal.frame_sample_stub(multimodal.with_fake_blob(big))
-        got = frames.collect()
-        assert len(got) == 3  # 2500 bytes -> 25 frames, every 10th -> 0,10,20
-        assert [r["frame_idx"] for r in sorted(got, key=lambda r: r["frame_idx"])] == [0, 10, 20]
-
 
 class TestConnectedComponents:
     def test_chain_and_island_clusters(self, spark):
@@ -314,15 +305,20 @@ class TestHllSketches:
         per_month.write.parquet(p)
         per_month = spark.read.parquet(p)
 
+        def rollup(*cols):
+            return per_month.groupBy(*cols).agg(
+                F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("approx_distinct")
+            )
+
         # merged global estimate vs exact — no rescan of lineitem
-        est = sk.rollup_estimate(per_month, []).collect()[0]["approx_distinct"]
+        est = rollup().collect()[0]["approx_distinct"]
         exact = li.select("l_orderkey").distinct().count()
         assert abs(est - exact) / exact < 0.05, (est, exact)
 
         # per-month estimates track exact counts too
         got = {
             r["month"]: r["approx_distinct"]
-            for r in sk.rollup_estimate(per_month, ["month"]).collect()
+            for r in rollup("month").collect()
         }
         exact_m = {
             r["month"]: r["n"]
@@ -1044,6 +1040,74 @@ class TestBloomContamination:
                 for g in grams
             ]
             assert got == want
+
+
+class TestFunnelDecontaminationParity:
+    def test_funnel_drop_set_vs_bloom_probe(self, spark):
+        """Parity for the FUNNEL COMPOSITION's decontamination stage:
+        the docs pretraining_funnel drops between fuzzy_dedup and
+        decontaminate are exactly the docs sharing an exact word
+        4-gram with the eval set, and the Bloom probe
+        (bloom_contamination) over the same corpus flags a SUPERSET of
+        them (a Bloom filter admits false positives, never false
+        negatives — so a Bloom pre-filter can gate ingestion without
+        ever letting a funnel-dropped doc through)."""
+        from ursa_major_choir_etl_spark.operators import curation
+
+        train_rows = [
+            # shares 'alpha beta gamma delta' (4-gram) with the eval set
+            (1, "web", "alpha beta gamma delta epsilon zeta eta theta"),
+            # shares a different eval 4-gram
+            (2, "web", "totally fresh opening then omega psi chi phi closing"),
+            # clean: overlaps eval by at most 3 consecutive words
+            (3, "books", "alpha beta gamma DIFFERENT tail keeps this document"),
+            (4, "books", "nothing in common with any benchmark text at all"),
+        ]
+        train = spark.createDataFrame(
+            train_rows, "doc_id long, source string, text string"
+        )
+        eval_df = spark.createDataFrame(
+            [
+                (90, "alpha beta gamma delta unrelated ending"),
+                (91, "intro words omega psi chi phi and more"),
+            ],
+            "doc_id long, text string",
+        )
+        no_pairs = spark.createDataFrame([], "id_a long, id_b long")
+
+        funnel = {
+            r["stage"]: r["n_docs"]
+            for r in curation.pretraining_funnel(
+                train,
+                eval_df,
+                no_pairs,
+                quality_threshold=0.0,  # isolate the decontamination stage
+                contam_n=4,
+                domain_cap=100,
+            ).collect()
+        }
+        # no quality/dedup attrition by construction; stage 5 drops
+        # exactly the two exact-4-gram-sharing docs
+        assert funnel["raw"] == 4
+        assert funnel["fuzzy_dedup"] == 4
+        assert funnel["decontaminate"] == 2
+
+        # the same corpus through the Bloom probe
+        flagged = {
+            r["train_id"]
+            for r in dedup.bloom_contamination(
+                train, eval_df, n=4
+            ).collect()
+        }
+        exact_dropped = {1, 2}
+        # no false negatives: every funnel-dropped doc is flagged
+        assert exact_dropped <= flagged
+        # and the clean docs are not exact-contaminated (they may
+        # appear in `flagged` only as Bloom false positives, which the
+        # downstream exact verifier would clear)
+        assert funnel["decontaminate"] == funnel["fuzzy_dedup"] - len(
+            exact_dropped
+        )
 
 
 class TestSemanticDedup:

@@ -1,4 +1,5 @@
-"""Table-maintenance utilities: compaction and sorted writes."""
+"""Table-maintenance utilities: sorted writes, merge upserts and schema
+evolution."""
 
 from __future__ import annotations
 
@@ -7,43 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from ursa_major_choir_etl_spark.sources.io import (
-    compact_partitions,
-    overwrite_parquet,
-    read_parquet_table,
-)
-
-
-class TestCompaction:
-    def test_compacts_fragmented_partitions(self, spark, tmp_path):
-        wh = str(tmp_path)
-        df = spark.range(10000).select(
-            (F.col("id") % 5).cast("string").alias("p"), F.col("id").alias("v")
-        )
-        # fragment: 3 appends of 8 files each per partition
-        for _ in range(3):
-            df.repartition(8).write.mode("append").partitionBy("p").parquet(
-                os.path.join(wh, "frag")
-            )
-        before_rows = spark.read.parquet(os.path.join(wh, "frag")).count()
-
-        files_before, files_after = compact_partitions(
-            spark, wh, "frag", target_files_per_partition=1, partition_by=["p"]
-        )
-        assert files_before > files_after
-        assert files_after <= 5  # one per partition value
-
-        after = spark.read.parquet(os.path.join(wh, "frag"))
-        assert after.count() == before_rows
-        assert after.groupBy("p").count().count() == 5
-
-    def test_unpartitioned_compaction(self, spark, tmp_path):
-        wh = str(tmp_path)
-        df = spark.range(1000)
-        df.repartition(16).write.mode("overwrite").parquet(os.path.join(wh, "t"))
-        b, a = compact_partitions(spark, wh, "t", target_files_per_partition=2)
-        assert b == 16 and a == 2
-        assert spark.read.parquet(os.path.join(wh, "t")).count() == 1000
+from ursa_major_choir_etl_spark.sources.io import overwrite_parquet, read_parquet_table
 
 
 class TestSortedWrites:
@@ -144,129 +109,6 @@ class TestMergeUpsert:
         after = spark.read.parquet(os.path.join(wh, "t"))
         assert after.count() == 20
         assert after.filter("v = 'new'").count() == 1
-
-
-class TestFormatRoundTrips:
-    def test_jsonl_roundtrip_with_schema(self, spark, tmp_path):
-        from ursa_major_choir_etl_spark.sources.io import read_jsonl, write_jsonl
-
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        p = os.path.join(str(tmp_path), "docs_jsonl")
-        write_jsonl(docs, p)
-        back = read_jsonl(spark, p, schema=docs.schema)
-        assert back.count() == docs.count()
-        a = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
-        b = sorted(r["doc_id"] for r in back.select("doc_id").collect())
-        assert a == b
-
-    def test_jsonl_corrupt_record_quarantined(self, spark, tmp_path):
-        from pyspark.sql.types import (
-            LongType, StringType, StructField, StructType,
-        )
-
-        from ursa_major_choir_etl_spark.sources.io import read_jsonl
-
-        p = os.path.join(str(tmp_path), "mixed.jsonl")
-        with open(p, "w") as f:
-            f.write('{"id": 1, "t": "ok"}\n')
-            f.write('{"id": broken!!\n')
-            f.write('{"id": 2, "t": "fine"}\n')
-        schema = StructType(
-            [
-                StructField("id", LongType()),
-                StructField("t", StringType()),
-                StructField("_corrupt_record", StringType()),
-            ]
-        )
-        df = read_jsonl(spark, p, schema=schema).cache()
-        assert df.count() == 3
-        assert df.filter("_corrupt_record IS NOT NULL").count() == 1
-        assert df.filter("id IS NOT NULL").count() == 2
-
-    def test_orc_roundtrip_partitioned(self, spark, tmp_path):
-        from ursa_major_choir_etl_spark.sources.io import read_orc, write_orc
-
-        df = spark.range(100).select(
-            (F.col("id") % 3).cast("string").alias("p"), F.col("id").alias("v")
-        )
-        p = os.path.join(str(tmp_path), "orc_t")
-        write_orc(df, p, partition_by=["p"])
-        back = read_orc(spark, p)
-        assert back.count() == 100
-        # partition-dir values are type-inferred on read (p=0 -> int)
-        assert set(
-            str(r["p"]) for r in back.select("p").distinct().collect()
-        ) == {"0", "1", "2"}
-
-
-class TestZorder:
-    @staticmethod
-    def _overlap_fraction(path, lo_k, hi_k, lo_p, hi_p):
-        """Fraction of parquet row groups whose (o_custkey,
-        o_totalprice) min/max stats overlap the query box — the
-        fraction of the table a stats-pruning scan must read."""
-        import duckdb
-
-        rows = duckdb.sql(
-            f"""
-            SELECT file_name, row_group_id,
-              max(CASE WHEN path_in_schema='o_custkey' THEN CAST(stats_min_value AS DOUBLE) END) kmin,
-              max(CASE WHEN path_in_schema='o_custkey' THEN CAST(stats_max_value AS DOUBLE) END) kmax,
-              max(CASE WHEN path_in_schema='o_totalprice' THEN CAST(stats_min_value AS DOUBLE) END) pmin,
-              max(CASE WHEN path_in_schema='o_totalprice' THEN CAST(stats_max_value AS DOUBLE) END) pmax
-            FROM parquet_metadata('{path}/*.parquet')
-            GROUP BY file_name, row_group_id
-            """
-        ).fetchall()
-        assert rows
-        hit = sum(
-            1
-            for _, _, kmin, kmax, pmin, pmax in rows
-            if kmax >= lo_k and kmin <= hi_k and pmax >= lo_p and pmin <= hi_p
-        )
-        return hit / len(rows)
-
-    def test_zorder_prunes_on_both_columns(self, spark, tmp_path_factory):
-        from ursa_major_choir_etl_spark.sources.clustering import write_zordered
-
-        orders = spark.read.parquet("/root/testdata/sf0.01/orders.parquet").select(
-            "o_orderkey", "o_custkey", "o_totalprice"
-        )
-        zdir = str(tmp_path_factory.mktemp("zord")) + "/t"
-        sdir = str(tmp_path_factory.mktemp("sort")) + "/t"
-        write_zordered(orders, zdir, ["o_custkey", "o_totalprice"], num_files=16)
-        (
-            orders.repartitionByRange(16, "o_custkey")
-            .sortWithinPartitions("o_custkey")
-            .write.mode("overwrite")
-            .parquet(sdir)
-        )
-        # round-trip intact
-        assert spark.read.parquet(zdir).count() == orders.count()
-
-        import duckdb
-
-        # Probe boxes off the 0.5 quantile: a slice straddling the
-        # curve's top-level split is Morton's worst case (hits both
-        # halves); typical selective predicates are what we grade.
-        ks = duckdb.sql(
-            f"SELECT quantile_cont(o_custkey, [0.29, 0.37]), "
-            f"quantile_cont(o_totalprice, [0.63, 0.71]) FROM '{zdir}/*.parquet'"
-        ).fetchone()
-        (lo_k, hi_k), (lo_p, hi_p) = ks
-        full = (-1e18, 1e18)
-
-        # box selective on custkey ONLY: both layouts prune
-        zk = self._overlap_fraction(zdir, lo_k, hi_k, *full)
-        sk = self._overlap_fraction(sdir, lo_k, hi_k, *full)
-        assert zk < 0.7, zk
-        assert sk < 0.7, sk
-        # box selective on totalprice ONLY: single-column sort reads
-        # ~everything, z-order still prunes
-        zp = self._overlap_fraction(zdir, *full, lo_p, hi_p)
-        sp = self._overlap_fraction(sdir, *full, lo_p, hi_p)
-        assert zp < 0.7, zp
-        assert sp > 0.9, sp
 
 
 class TestSchemaEvolution:

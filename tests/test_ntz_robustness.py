@@ -18,9 +18,8 @@ source parquet carries
 Two layers are under test: the session conf
 (``inferTimestampNTZ.enabled=false`` in session.py) that normalizes
 reads engine-wide, and the defensive casts in ``plans.queries.T`` /
-``operators.events`` / ``streaming.jobs.read_event_stream`` that keep
-a caller-built session (the driver's) safe even when the conf cannot
-be applied.
+``operators.events`` that keep a caller-built session safe even when
+the conf cannot be applied.
 """
 
 from __future__ import annotations
@@ -127,53 +126,6 @@ class TestEncodingInvariance:
         got = sorted(map(tuple, ev.sessionize(ntz).collect()))
         want = sorted(map(tuple, ev.sessionize(df).collect()))
         assert got == want
-
-    def test_stream_reader_casts_ntz(self, spark, encoded_events, tmp_path):
-        """read_event_stream must emit a watermark-compatible TIMESTAMP
-        even when the provided schema says NTZ."""
-        from pyspark.sql.types import (
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-            TimestampNTZType,
-            DoubleType,
-        )
-
-        from ursa_major_choir_etl_spark.streaming import jobs
-
-        schema = StructType(
-            [
-                StructField("event_id", LongType()),
-                StructField("ts", TimestampNTZType()),
-                StructField("user_id", LongType()),
-                StructField("event_type", StringType()),
-                StructField("value", DoubleType()),
-            ]
-        )
-        import os
-        import shutil
-
-        stream_dir = str(tmp_path / "stream_src")
-        os.makedirs(stream_dir, exist_ok=True)
-        shutil.copy(encoded_events["us_naive"], stream_dir + "/part0.parquet")
-        stream = jobs.read_event_stream(spark, stream_dir, schema)
-        assert dict(stream.dtypes)["ts"] == "timestamp"
-        # and the watermark analysis that broke in round 4 now resolves
-        agg = jobs.streaming_tumbling_counts(stream)
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("ntz_probe")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(60)
-        finally:
-            q.stop()
-        n = spark.sql("SELECT count(*) AS n FROM ntz_probe").first()["n"]
-        assert n > 0
 
 
 class TestNtzTzGuard:

@@ -4,13 +4,10 @@
   one file per partition value;
 - static partition pruning (PartitionFilters from a literal filter);
 - dynamic partition pruning (dim-filter join prunes the fact scan at
-  runtime via a dynamicpruningexpression subquery);
-- runtime bloom-filter join pruning (might_contain injected into the
-  probe side of a shuffle join).
+  runtime via a dynamicpruningexpression subquery).
 
-These are the two optimizer features that set the scan cost of a
-partitioned 100 TB fact table; SCALE.md argues them, this file proves
-they fire on this engine's layouts.
+These set the scan cost of a partitioned 100 TB fact table; SCALE.md
+argues them, this file proves they fire on this engine's layouts.
 """
 
 from __future__ import annotations
@@ -21,10 +18,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ursa_major_choir_etl_spark.sources.io import overwrite_parquet
-from ursa_major_choir_etl_spark.sources.partitioning import (
-    partition_values,
-    runtime_bloom_filters,
-)
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -85,11 +78,6 @@ class TestHiveLayout:
         n = spark.read.parquet(part_orders).count()
         assert n == spark.read.parquet(f"{SF_DIR}/orders.parquet").count()
 
-    def test_partition_values_catalog(self, spark, part_orders, data_years):
-        vals = {r.o_year for r in partition_values(spark, part_orders).collect()}
-        assert vals == set(data_years)
-
-
 class TestStaticPruning:
     def test_literal_filter_reaches_partition_filters(
         self, spark, part_orders, data_years
@@ -134,35 +122,3 @@ class TestDynamicPartitionPruning:
         }
         assert got == want and got
 
-
-class TestRuntimeBloomFilter:
-    def test_might_contain_injected_and_exact(self, spark):
-        li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").filter(
-            "o_orderpriority = '1-URGENT'"
-        )
-        q = (
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        baseline = {(r.o_orderpriority, r.n) for r in q.collect()}
-        with runtime_bloom_filters(spark, app_side_scan_threshold="1B"):
-            li2 = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-            o2 = spark.read.parquet(f"{SF_DIR}/orders.parquet").filter(
-                "o_orderpriority = '1-URGENT'"
-            )
-            q2 = (
-                li2.join(o2, li2.l_orderkey == o2.o_orderkey)
-                .groupBy("o_orderpriority")
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            plan = plan_of(q2)
-            assert "might_contain" in plan
-            assert "BroadcastHashJoin" not in plan  # genuinely the shuffle path
-            got = {(r.o_orderpriority, r.n) for r in q2.collect()}
-        assert got == baseline
-        # confs restored
-        assert (
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1"
-        )

@@ -135,6 +135,19 @@ class TestRunPipeline:
                 spark, wh, table, RUN_TS_COLUMNS
             ), table
 
+    def test_every_plan_compiles(self, spark, tmp_path):
+        """With the interpreted fallback off, a plan that Janino cannot
+        compile fails the run instead of logging a compile error and
+        running without whole-stage codegen."""
+        key = "spark.sql.codegen.fallback"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            audit = run_pipeline(spark, FIXTURE, str(tmp_path / "warehouse"))
+        finally:
+            spark.conf.set(key, old)
+        assert audit["status"] == "success", audit["error_message"]
+
     def test_sheet_without_who_degrades_to_empty_tables(self, spark, tmp_path):
         with open(FIXTURE, newline="", encoding="utf-8") as f:
             rows = list(csv.reader(f))

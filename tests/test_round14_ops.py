@@ -31,11 +31,10 @@ class TestSeqUpsertSink:
                 "append"
             ).parquet(src)
             time.sleep(1.1)  # distinct mtimes => deterministic order
-        stream = jobs.read_event_stream(
-            spark,
-            src,
-            spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
         )
         q = jobs.streaming_upsert_sink(
             stream,
@@ -92,11 +91,10 @@ class TestSeqUpsertSink:
                 "append"
             ).parquet(src)
             time.sleep(1.1)
-        stream = jobs.read_event_stream(
-            spark,
-            src,
-            spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
         )
         q = jobs.streaming_upsert_sink(
             stream,

@@ -79,100 +79,3 @@ class TestSaltedJoin:
         )
         assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
 
-
-class TestHierarchicalSplit:
-    def test_mega_cluster_split_contract(self, spark):
-        """kmeans.hierarchical_assignments — the semantic_dedup skew
-        escape hatch: (a) after the split no cluster exceeds the cap;
-        (b) untouched small clusters keep their ids and members;
-        (c) cids stay unique per doc; (d) semantic_dedup drops under
-        the refined assignment are a SUBSET of drops under the
-        unsplit one (splitting only removes cross-subcluster
-        comparisons, never invents a drop), and within each refined
-        cluster the decisions are exactly brute force."""
-        import numpy as np
-
-        from ursa_major_choir_etl_spark.operators import kmeans, similarity
-
-        rng = np.random.RandomState(11)
-        n, dim = 300, 4
-        vecs = rng.randint(-8, 9, size=(n, dim)).astype(float)
-        vecs[np.abs(vecs).sum(axis=1) == 0, 0] += 1.0
-        # cluster 0 holds 80% of the corpus; clusters 1..4 are small
-        cids = [0] * 240 + [1 + (i % 4) for i in range(n - 240)]
-        emb = spark.createDataFrame(
-            [(i, [float(x) for x in vecs[i]]) for i in range(n)],
-            "vec_id long, embedding array<double>",
-        )
-        asg = spark.createDataFrame(
-            [(i, int(c)) for i, c in enumerate(cids)], "vec_id long, cid long"
-        )
-
-        cap = 100
-        refined = kmeans.hierarchical_assignments(
-            spark, emb, asg, max_cluster_size=cap, k_split=4, iters=2
-        )
-        rows = refined.collect()
-        # (c) one assignment per doc
-        assert len(rows) == n
-        assert len({r["vec_id"] for r in rows}) == n
-        by_cid: dict = {}
-        for r in rows:
-            by_cid.setdefault(r["cid"], []).append(r["vec_id"])
-        # (a) cap respected everywhere
-        assert max(len(v) for v in by_cid.values()) <= cap
-        # (b) small clusters untouched
-        got_small = {
-            c: sorted(v) for c, v in by_cid.items() if c in (1, 2, 3, 4)
-        }
-        want_small: dict = {}
-        for i, c in enumerate(cids):
-            if c:
-                want_small.setdefault(c, []).append(i)
-        assert got_small == want_small
-
-        # (d) drop subset vs the unsplit assignment + exactness
-        thr = 0.6
-        drops_split = {
-            r["drop_id"]: r["keep_id"]
-            for r in similarity.semantic_dedup(
-                emb, refined, threshold=thr
-            ).collect()
-        }
-        drops_full = {
-            r["drop_id"]: r["keep_id"]
-            for r in similarity.semantic_dedup(
-                emb, asg, threshold=thr
-            ).collect()
-        }
-        assert set(drops_split) <= set(drops_full)
-        assert drops_full  # fixture actually has near-dups
-
-        # brute-force exactness within the refined clusters
-        norms = np.linalg.norm(vecs, axis=1)
-        sims = np.round((vecs @ vecs.T) / np.outer(norms, norms), 6)
-        expect = {}
-        for members in by_cid.values():
-            ms = sorted(members)
-            for j, b in enumerate(ms):
-                keepers = [a for a in ms[:j] if sims[a, b] >= thr]
-                if keepers:
-                    expect[b] = min(keepers)
-        assert drops_split == expect
-
-    def test_no_oversize_is_identity(self, spark):
-        from ursa_major_choir_etl_spark.operators import kmeans
-
-        emb = spark.createDataFrame(
-            [(i, [float(i), 1.0]) for i in range(20)],
-            "vec_id long, embedding array<double>",
-        )
-        asg = spark.createDataFrame(
-            [(i, i % 5) for i in range(20)], "vec_id long, cid long"
-        )
-        out = kmeans.hierarchical_assignments(
-            spark, emb, asg, max_cluster_size=10
-        )
-        assert sorted((r["vec_id"], r["cid"]) for r in out.collect()) == [
-            (i, i % 5) for i in range(20)
-        ]

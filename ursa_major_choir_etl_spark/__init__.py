@@ -13,7 +13,7 @@ Layout:
 - ``operators``   dims / facts / marts / analytics / dedup / similarity /
                   text / events — all pure DataFrame -> DataFrame
 - ``plans``       pipeline orchestration + audit log
-- ``streaming``   Structured Streaming variants of the analytics
+- ``streaming``   Structured Streaming store sinks and ingestion gates
 """
 
 __version__ = "0.1.0"

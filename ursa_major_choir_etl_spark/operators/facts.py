@@ -174,8 +174,17 @@ def build_fact_attendance(
     )
     melted = melted.withColumn("rehearsal_date", iso_map[F.col("raw_header")])
 
-    is_empty = F.col("raw_value").isNull() | (F.trim(F.col("raw_value")) == "")
-    parsed = parse_decimal_comma("raw_value")
+    # Parse and test emptiness once, in their own projection: inlined
+    # into the select below, each repeats, and the subexpression
+    # elimination over the unpivot's Expand generates code that Janino
+    # rejects (the stage then runs without whole-stage codegen).
+    melted = melted.withColumns(
+        {
+            "_parsed": parse_decimal_comma("raw_value"),
+            "_empty": F.col("raw_value").isNull() | (F.trim(F.col("raw_value")) == ""),
+        }
+    )
+    is_empty, parsed = F.col("_empty"), F.col("_parsed")
     fact = melted.select(
         "rehearsal_date",
         "chorister_id",

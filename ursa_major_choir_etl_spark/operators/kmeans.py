@@ -173,95 +173,3 @@ def kmeans_assignments_integer(
     the same deterministic rounds as kmeans_lloyd_integer."""
     assigned = _lloyd_rounds(spark, emb, k, iters, scale, id_col, vec_col)
     return assigned.select(F.col(id_col), F.col("cid"))
-
-
-def hierarchical_assignments(
-    spark: SparkSession,
-    emb: DataFrame,
-    assignments: DataFrame,
-    max_cluster_size: int,
-    k_split: int = 4,
-    iters: int = 2,
-    max_depth: int = 4,
-    scale: int = 1_000_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The semantic-dedup skew escape hatch (similarity.semantic_dedup
-    docstring's "hierarchical k-means for skewed ones", now real):
-    any cluster whose membership exceeds ``max_cluster_size`` is
-    re-clustered with a ``k_split``-way deterministic Lloyd pass over
-    its own members, recursively (up to ``max_depth`` levels), until
-    every cluster fits. Returns a refined (id, cid) assignment whose
-    cids remain unique: split children get
-    ``offset + parent_index * k_split + sub_cid`` with ``offset``
-    above the current max cid, deterministic across runs.
-
-    Semantics contract (what semantic_dedup over the refined
-    assignment preserves vs the unsplit one, pinned by
-    tests/test_skew.py): splitting only REMOVES cross-subcluster
-    comparisons — every drop decision under the refined assignment is
-    also a drop under the parent assignment (same keep-smaller-id
-    rule, a subset of the pairs); no new drops can appear. That is
-    the standard SemDeDup trade: bounded |c|^2 task cost for a
-    recall haircut confined to the split clusters.
-
-    Scale shape: the oversize-cluster list is COLLECTED to the driver
-    — by construction there are at most corpus_size /
-    max_cluster_size oversize clusters, and in practice the escape
-    hatch exists for a HANDFUL of mega-clusters (the k-means
-    degenerate case), so the driver loop is short; each split is one
-    membership semi-join + the per-round broadcast Lloyd pass over
-    that cluster's members only. The common path (nothing oversize)
-    is one aggregate and returns the input unchanged.
-    """
-    asg = assignments.select(F.col(id_col), F.col("cid").cast("long"))
-    for _ in range(max_depth):
-        sizes = asg.groupBy("cid").agg(F.count(F.lit(1)).alias("_n"))
-        stats = sizes.agg(
-            F.max("cid").alias("_maxcid"),
-            F.sum(
-                (F.col("_n") > max_cluster_size).cast("int")
-            ).alias("_n_over"),
-        ).collect()[0]
-        if not stats["_n_over"]:
-            return asg
-        oversize = sorted(
-            r["cid"]
-            for r in sizes.filter(F.col("_n") > max_cluster_size).collect()
-        )
-        offset = int(stats["_maxcid"]) + 1
-        kept = asg.join(
-            sizes.filter(F.col("_n") <= max_cluster_size).select("cid"),
-            "cid",
-            "left_semi",
-        )
-        refined = [kept]
-        for idx, cid in enumerate(oversize):
-            members = emb.join(
-                asg.filter(F.col("cid") == cid).select(id_col),
-                id_col,
-                "left_semi",
-            )
-            sub = kmeans_assignments_integer(
-                spark,
-                members,
-                k=k_split,
-                iters=iters,
-                scale=scale,
-                id_col=id_col,
-                vec_col=vec_col,
-            )
-            refined.append(
-                sub.select(
-                    F.col(id_col),
-                    (
-                        F.lit(offset + idx * k_split) + F.col("cid")
-                    ).cast("long").alias("cid"),
-                )
-            )
-        out = refined[0]
-        for frame in refined[1:]:
-            out = out.unionByName(frame)
-        asg = out
-    return asg

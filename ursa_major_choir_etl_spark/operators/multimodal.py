@@ -163,32 +163,6 @@ def embed_blob_stub(
     return blobs.mapInPandas(embed, schema=f"{id_col} long, embedding array<float>")
 
 
-def frame_sample_stub(
-    blobs: DataFrame,
-    every_nth: int = 10,
-    id_col: str = "doc_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """Video frame-sampling plumbing: one output row per sampled frame
-    (fake frames = fixed-size byte slices). Demonstrates the 1->N
-    mapInPandas fan-out shape used for real frame extraction."""
-    schema = f"{id_col} long, frame_idx int, frame_bytes binary"
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, fbytes = [], [], []
-            for rid, blob in zip(pdf[id_col].values, pdf[blob_col].values):
-                for i in range(0, max(len(blob) // 100, 1), every_nth):
-                    ids.append(rid)
-                    fidx.append(i)
-                    fbytes.append(blob[i * 100 : (i + 1) * 100])
-            yield pd.DataFrame(
-                {id_col: ids, "frame_idx": fidx, "frame_bytes": fbytes}
-            )
-
-    return blobs.mapInPandas(sample, schema=schema)
-
-
 def resize_image_stub(
     blobs: DataFrame,
     out_w: int = 32,

@@ -444,8 +444,8 @@ def semantic_dedup(
     cluster (one applyInPandas task per cid), never across the corpus,
     so compute is sum over clusters of |c|^2 instead of N^2 and each
     task holds one cluster's vectors. With k sized so clusters fit a
-    task (or hierarchical k-means for skewed ones), this is the
-    standard embedding-dedup layout for pretraining corpora; cosine
+    task, this is the standard embedding-dedup layout for pretraining
+    corpora (an oversized cluster puts its whole |c|^2 in one task); cosine
     uses the oracle association (dot/(|a||b|), _cosine_matrix) so a
     SQL replay of cluster-restricted pairs value-matches.
     """

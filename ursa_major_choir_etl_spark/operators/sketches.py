@@ -36,22 +36,6 @@ def distinct_sketches(
     )
 
 
-def rollup_estimate(
-    sketches: DataFrame,
-    rollup_cols: list[str],
-    out_col: str = "approx_distinct",
-) -> DataFrame:
-    """Merge fine-grained sketches to a coarser grain and estimate:
-    union per rollup group, no raw-data rescan. ``rollup_cols`` may be
-    empty for a single global row."""
-    grouped = (
-        sketches.groupBy(*rollup_cols) if rollup_cols else sketches.groupBy()
-    )
-    return grouped.agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias(out_col)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Count-min sketch (mergeable heavy-hitter frequencies)
 # ---------------------------------------------------------------------------

@@ -393,48 +393,6 @@ def overwrite_parquet(
     return rows
 
 
-def compact_partitions(
-    spark: SparkSession,
-    warehouse: str,
-    name: str,
-    target_files_per_partition: int = 1,
-    partition_by: list[str] | None = None,
-) -> tuple[int, int]:
-    """Small-file compaction: rewrite a table so each partition holds
-    ``target_files_per_partition`` files. Frequent incremental writes
-    fragment partitions; scan cost at 100 TB is dominated by file
-    count, so compaction is routine table maintenance.
-
-    Returns (files_before, files_after).
-    """
-    import glob
-
-    path = os.path.join(warehouse, name)
-
-    def count_files() -> int:
-        return len(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-
-    before = count_files()
-    df = spark.read.parquet(path)
-    cols = partition_by or []
-    if cols:
-        out = df.repartition(target_files_per_partition, *cols)
-    else:
-        out = df.repartition(target_files_per_partition)
-    # Write to a temp location then swap — compaction must not lose
-    # the table on failure.
-    tmp = path + "__compacting"
-    writer = out.write.mode("overwrite")
-    if cols:
-        writer = writer.partitionBy(*cols)
-    writer.parquet(tmp)
-    import shutil
-
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-    return before, count_files()
-
-
 def merge_upsert(
     spark: SparkSession,
     warehouse: str,
@@ -524,69 +482,6 @@ def merge_upsert(
 def append_parquet(df: DataFrame, warehouse: str, name: str) -> None:
     """Append sink (S8) — used by the etl_log audit table."""
     df.write.mode("append").parquet(os.path.join(warehouse, name))
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 16,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Bucketed managed table: co-locates rows by hash(bucket_cols) at
-    WRITE time, so later equi-joins/aggregations on those columns read
-    pre-partitioned data and skip the shuffle entirely — the standard
-    100 TB pattern for fact-to-fact joins that repeat every run.
-
-    Requires a catalog (saveAsTable); plain .parquet() paths cannot
-    carry bucket metadata.
-    """
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(name)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """JSON-lines source — the lingua franca for document corpora.
-
-    Pass ``schema`` in production: without it Spark runs a FULL
-    inference scan before the real read (2x I/O at 100 TB, and a
-    malformed row can silently widen a column to string). Corrupt
-    records land in ``_corrupt_record`` (PERMISSIVE mode) instead of
-    failing the scan — the quarantine-not-crash policy of E5.
-    """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", "_corrupt_record"
-    ).json(path)
-
-
-def write_jsonl(df: DataFrame, path: str, compression: str | None = "gzip") -> None:
-    """JSON-lines sink (overwrite). Gzip per-file compression by
-    default — JSONL is an interchange format here, not the analytic
-    store (Parquet is); this sink exists for handing corpora to
-    tokenizer/training jobs that expect JSONL."""
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source — same columnar guarantees as Parquet (predicate
-    pushdown, column pruning, vectorized read); provided so the engine
-    can sit on either lakehouse format."""
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
 
 
 def read_tables(

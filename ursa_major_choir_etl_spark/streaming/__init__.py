@@ -1,3 +1,4 @@
-"""Structured Streaming variants of the analytics (SURVEY §2.11 noted
-the reference is strictly batch; these are the engine's extension
-surface for the same semantics on unbounded input)."""
+"""Structured Streaming store sinks and ingestion gates (SURVEY §2.11
+noted the reference is strictly batch; these are the engine's
+extension surface for incremental, replay-safe state on unbounded
+input)."""

@@ -1,18 +1,13 @@
-"""Streaming jobs: the batch event operators re-expressed on
-readStream sources.
+"""Streaming jobs on readStream sources: the store sinks behind the
+registry's streaming queries (q283, q289-q297) and two stateless
+ingestion gates.
 
-Design rules for the 100 TB/unbounded target:
-- event-time windows + watermarks bound state (no unbounded
-  aggregation state);
-- session windows use the built-in ``session_window`` (state store
-  managed, gap-based) rather than hand-rolled lag/cumsum (which
-  requires a full-partition sort — fine in batch, impossible on an
-  unbounded stream);
-- custom stateful logic (the trailing-miss streak) uses
-  ``applyInPandasWithState`` with explicit state schema + timeout.
+The gates (``streaming_embedding_near_dup``,
+``streaming_incremental_dedup``) are stream-static joins against a
+batch-built index: they hold no state store and need no watermark,
+and they return a streaming DataFrame whose sink and trigger the
+caller picks.
 
-The operator jobs return a streaming DataFrame; callers pick sink and
-trigger (tests drain them into a memory sink with ``run_to_memory``).
 The ``streaming_*_sink`` jobs start their own query: all of them
 drain the available input (availableNow trigger) through a
 foreachBatch function, and each store sink writes every micro-batch
@@ -45,197 +40,6 @@ from ursa_major_choir_etl_spark.sources.io import (
     overwrite_parquet,
     read_parquet_table,
 )
-
-
-def read_event_stream(
-    spark, path: str, schema, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream over a parquet directory (the batch/stream
-    symmetric source: same files, incremental discovery).
-
-    Any TIMESTAMP_NTZ column (tz-naive parquet under
-    inferTimestampNTZ) is cast to TIMESTAMP: watermarks and
-    session_window reject NTZ on streams, and under the engine's UTC
-    session tz the cast preserves micros exactly."""
-    from ursa_major_choir_etl_spark.functions.columns import (
-        cast_ntz_to_timestamp,
-    )
-
-    df = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-    # UTC-guarded: raises rather than reinterpreting wall-clock if the
-    # session tz was locked to something other than UTC.
-    return cast_ntz_to_timestamp(df)
-
-
-def streaming_tumbling_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Tumbling event-time window counts with a watermark: late rows
-    beyond the watermark are dropped and window state is reclaimed."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            F.col("window.start").cast("string").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def streaming_sessionize(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Gap-based sessions on a stream via session_window — the
-    streaming equivalent of operators/events.sessionize (same gap
-    semantics; session boundaries close once the watermark passes)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap), F.col(user_col))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col(user_col),
-            F.col("session_window.start").cast("string").alias("session_start"),
-            F.col("session_window.end").cast("string").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def streaming_error_streaks(
-    events: DataFrame,
-    match_type: str = "error",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-user trailing streak of ``match_type`` events, maintained
-    incrementally with applyInPandasWithState (GroupState): state is
-    one (streak, last_ts) pair per user — O(users) state, not O(events).
-
-    Batch-equivalent: operators/events.trailing_streak.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = f"{user_col} long, streak_len long"
-    state_schema = "streak long, last_ts long"
-
-    def update(key, pdfs, state: GroupState):
-        streak, last_ts = state.get if state.exists else (0, 0)
-        # Concatenate the group's chunks and sort once — chunk order
-        # within a micro-batch is not time-ordered.
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(ts_col)
-        for _, row in pdf.iterrows():
-            ts_us = int(row[ts_col].value // 1000)
-            if ts_us < last_ts:
-                continue  # late event older than state: ignore
-            last_ts = ts_us
-            streak = streak + 1 if row["event_type"] == match_type else 0
-        state.update((streak, last_ts))
-        yield pd.DataFrame({user_col: [key[0]], "streak_len": [streak]})
-
-    return events.groupBy(user_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_dedup_documents(
-    docs: DataFrame,
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming exact dedup: drop re-arrivals of the same content
-    fingerprint within the watermark horizon
-    (dropDuplicatesWithinWatermark — state is reclaimed as event time
-    advances, so dedup state stays bounded on an unbounded stream).
-
-    Batch-equivalent: operators.dedup.exact_duplicate_groups keeps one
-    row per fingerprint; the streaming form keeps the FIRST arrival and
-    suppresses later copies arriving within the watermark.
-    """
-    from ursa_major_choir_etl_spark.operators.text import fingerprint
-
-    return (
-        docs.withColumn("fingerprint", fingerprint(text_col))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["fingerprint"])
-    )
-
-
-def streaming_enrich(
-    events: DataFrame,
-    dim: DataFrame,
-    on: str,
-    dim_cols: list[str] | None = None,
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static enrichment join: each micro-batch of the stream
-    joins against the (re-read-per-batch) static dimension. The dim is
-    broadcast — no shuffle of the stream side, no state store; the
-    standard pattern for attaching slowly-changing reference data
-    (user profile, song catalog) to an unbounded event stream.
-
-    Batch-equivalent: the mart lookup joins J1/J3
-    (reference: etl/marts.py:145,158-163 builds a dict index and
-    probes per row — same semantics, hash join per micro-batch here).
-    """
-    right = dim.select(on, *dim_cols) if dim_cols else dim
-    return events.join(F.broadcast(right), on, how)
-
-
-def streaming_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str = "l_ts",
-    right_ts: str = "r_ts",
-    max_delay: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Stream-stream inner join within an event-time interval: a
-    right-side event matches a left-side event with the same ``key``
-    if it lands in [left_ts, left_ts + max_delay] (the
-    impression->click attribution shape).
-
-    Both sides carry watermarks and the join condition bounds
-    event-time in BOTH directions, so the state store can evict: a
-    buffered left row is droppable once the right watermark passes
-    left_ts + max_delay, and vice versa. Without the time bound the
-    state grows without limit — the condition is not an optimization,
-    it is what makes the join runnable on an unbounded stream.
-    """
-    l = left.withWatermark(left_ts, watermark).alias("l")
-    r = right.withWatermark(right_ts, watermark).alias("r")
-    cond = (
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (F.col(f"r.{right_ts}") >= F.col(f"l.{left_ts}"))
-        & (
-            F.col(f"r.{right_ts}")
-            <= F.col(f"l.{left_ts}") + F.expr(f"INTERVAL {max_delay}")
-        )
-    )
-    return l.join(r, cond, "inner")
 
 
 def _drain(stream_df: DataFrame, batch_fn, checkpoint_dir: str | None):
@@ -399,87 +203,6 @@ def streaming_upsert_sink(
         )
 
     return _drain(stream_df, merge_batch, checkpoint_dir)
-
-
-def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
-    """Test/debug harness: drain all available input into a memory
-    sink and return the query handle."""
-    return (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def streaming_contaminated_grams(
-    docs: DataFrame,
-    eval_set: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ts_col: str = "ts",
-    n: int = 4,
-    k_hashes: int = 3,
-    nibbles: int = 5,
-) -> DataFrame:
-    """Streaming Bloom decontamination probe: as documents arrive,
-    emit every word n-gram that hits the STATIC eval corpus's Bloom
-    filter — the alert stream an ingestion pipeline tails to catch
-    benchmark contamination before a doc lands in the training set.
-
-    Shape: completely STATELESS on the stream side. The eval bit set
-    (distinct int positions, batch-built once) is the static side of
-    ``k_hashes`` chained broadcast LEFT SEMI joins — one per hash
-    probe, a gram survives only if ALL its bits are set — so there is
-    no state store, no watermark requirement, and per-micro-batch cost
-    is map-side. Per-doc gram dedup is array_distinct on the row
-    (stateless), not the batch operator's global distinct().
-
-    Batch parity: running this same plan on a batch DataFrame yields
-    exactly the (train_id, shingle) pairs bloom_contamination counts
-    (tested). Output: (id, ts, shingle).
-    """
-    from ursa_major_choir_etl_spark.operators.dedup import (
-        bloom_position_sql,
-        shingle_array,
-        word_shingles,
-    )
-    from ursa_major_choir_etl_spark.operators.text import normalized_text, tokens
-
-    pos_arr = F.array(
-        *[
-            F.expr(bloom_position_sql(j, "shingle", nibbles))
-            for j in range(k_hashes)
-        ]
-    )
-    bits = (
-        word_shingles(eval_set, id_col=id_col, text_col=text_col, n=n)
-        .select("shingle")
-        .distinct()
-        .select(F.explode(pos_arr).alias("pos"))
-        .distinct()
-    )
-    grams = docs.select(
-        F.col(id_col),
-        F.col(ts_col),
-        F.col(text_col),
-        tokens(normalized_text(text_col)).alias("_toks"),
-    ).select(
-        F.col(id_col),
-        F.col(ts_col),
-        F.explode(F.array_distinct(shingle_array(F.col("_toks"), n))).alias(
-            "shingle"
-        ),
-    )
-    probed = grams.withColumn("_ps", pos_arr)
-    for j in range(k_hashes):
-        probed = probed.join(
-            F.broadcast(bits),
-            probed["_ps"][j] == bits["pos"],
-            "leftsemi",
-        )
-    return probed.select(id_col, ts_col, "shingle")
 
 
 def streaming_quantile_sketch_sink(
@@ -733,48 +456,6 @@ def read_fuzzy_probe_store(spark, warehouse: str, name: str) -> DataFrame:
     streaming_fuzzy_dedup_sink: (new_id, corpus_id, jaccard,
     batch_id)."""
     return read_parquet_table(spark, warehouse, name)
-
-
-def streaming_outlier_gate(
-    stream_events: DataFrame,
-    thresholds: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    k: float = 3.0,
-) -> DataFrame:
-    """Median/MAD outlier gating AT INGESTION: each arriving event is
-    flagged against per-key robust thresholds profiled from history —
-    the streaming form of quality.robust_outlier_report (q123), and
-    the monitor a metric pipeline runs before admitting a batch.
-
-    ``thresholds`` is the STATIC (key, med_value, mad_value) profile
-    (e.g. q123's output persisted by the nightly job — at scale the
-    pre-built table, same contract as the q113 fingerprint index).
-    Stateless: one stream-static LEFT join on the key + a column
-    comparison, no state store. The comparison mirrors the batch
-    operator bit-for-bit: 6dp-quantized |v - med| > 6dp-quantized
-    k * MAD. Keys absent from the profile pass with a NULL verdict
-    (is_outlier NULL = "no baseline yet", distinct from false).
-
-    Output stream: input columns + (med_value, mad_value,
-    abs_dev, is_outlier).
-    """
-    from pyspark.sql import functions as F
-
-    prof = thresholds.select(
-        F.col(key_col),
-        F.col("med_value"),
-        F.col("mad_value"),
-    )
-    joined = stream_events.join(prof, key_col, "left")
-    adev = F.round(F.abs(F.col(value_col) - F.col("med_value")), 6)
-    return joined.select(
-        "*",
-        adev.alias("abs_dev"),
-        (adev > F.round(F.lit(k) * F.col("mad_value"), 6)).alias(
-            "is_outlier"
-        ),
-    )
 
 
 def streaming_card_sink(
@@ -1226,28 +907,6 @@ def read_hll_register_store(
     _read_generation)."""
     return _read_generation(
         spark, warehouse, name, "grp string, bkt int, r int", before_gen
-    )
-
-
-def hll_store_estimates(regs: DataFrame) -> DataFrame:
-    """Per-group distinct estimates from a (grp, bkt, r) register
-    store — the integer HLL formula shared with the q265 overlap
-    matrix. Output: (grp, est_distinct)."""
-    from ursa_major_choir_etl_spark.operators.sketches import (
-        _hll_estimate_expr,
-    )
-
-    term = F.expr("CAST(shiftleft(1L, 57 - r) AS DECIMAL(38,0))")
-    return (
-        regs.withColumn("_t", term)
-        .groupBy("grp")
-        .agg(F.sum("_t").alias("_ssum"), F.count(F.lit(1)).alias("_nbk"))
-        .select(
-            "grp",
-            F.expr(
-                f"CAST({_hll_estimate_expr()} AS BIGINT)"
-            ).alias("est_distinct"),
-        )
     )
 
 
