@@ -1,5 +1,5 @@
 """Unit checks of the choir ETL's building blocks: the scalar column
-functions (reference C4/C5/C8/K3/C9/C12), header hygiene, the chorister
+functions (reference C5/C8/K3/C9/C12), header hygiene, the chorister
 dimension's row filters and id rules (F1-F3, K1, K5), the as-of
 assignment join (J2) and the alert engine's input normalisation (F4,
 W1). The end-to-end tests in test_pipeline.py see these only through
@@ -14,7 +14,6 @@ from ursa_major_choir_etl_spark.functions.columns import (
     date_iso,
     normalize_name,
     rate_icon,
-    safe_float,
     safe_str,
     voice_part_and_active,
 )
@@ -49,12 +48,6 @@ def _apply(spark, fn, values, ddl="v string"):
 
 
 class TestScalarColumns:
-    def test_safe_float_parses_comma_decimals_with_default(self, spark):
-        got = _apply(spark, safe_float, ["2,5", " 3 ", "abc", None, "-0,25"])
-        assert got == [2.5, 3.0, 0.0, 0.0, -0.25]
-        got = _apply(spark, lambda c: safe_float(c, default=-1.0), ["x", "7"])
-        assert got == [-1.0, 7.0]
-
     def test_safe_str_trims_and_blanks_null(self, spark):
         assert _apply(spark, safe_str, ["  x ", None, "", "a b"]) == [
             "x",

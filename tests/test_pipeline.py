@@ -1,9 +1,10 @@
 """EP1 ``run_pipeline`` and EP2 ``build_marts`` end to end on the
 raw_wide fixture: audit counts, refresh idempotence, the missing-table
 and degraded-sheet paths, a Spark job budget per run, run-to-run
-determinism of the concurrent writes, and the E4 audit row when a
-builder fails mid-wave; plus the overwrite sink's row count and
-one-file-per-partition layout."""
+determinism of the concurrent writes, no Python-list DataFrame (so no
+Python worker) on either path, equal marts from typed and string-shaped
+inputs, and the E4 audit row when a builder fails mid-wave; plus the
+overwrite sink's row count and one-file-per-partition layout."""
 
 from __future__ import annotations
 
@@ -16,11 +17,26 @@ import uuid
 import warnings
 
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType
 
+from ursa_major_choir_etl_spark.operators.marts import (
+    build_mart_attendance,
+    build_mart_chorister_song,
+    build_mart_song_rehearsal,
+)
 from ursa_major_choir_etl_spark.plans import pipeline
-from ursa_major_choir_etl_spark.plans.pipeline import build_marts, run_pipeline
-from ursa_major_choir_etl_spark.sources.io import overwrite_parquet, read_parquet_table
+from ursa_major_choir_etl_spark.plans.pipeline import (
+    MART_INPUT_TABLES,
+    build_marts,
+    run_pipeline,
+)
+from ursa_major_choir_etl_spark.sources.io import (
+    overwrite_parquet,
+    read_parquet_table,
+    read_tables,
+)
 
 FIXTURE = "tests/fixtures/raw_wide.csv"
 AUDITED = {
@@ -38,10 +54,10 @@ RUN_TS_COLUMNS = {"created_at", "updated_at", "load_ts", "run_ts"}
 #: one job per table (two with a shuffle), the audit counts come from
 #: the writes, and unpartitioned tables are read with their footer
 #: schema (no inference job); a probe or re-read count() per table
-#: breaks the caps. EP1 runs 50 jobs and a refresh 18; the caps keep
-#: the earlier headroom above that (19 and 3). The floors catch jobs
-#: that escape the run's job group, such as a worker thread that did
-#: not inherit it.
+#: breaks the caps. EP1 runs 44 jobs (up to 47 as a session's first
+#: EP1) and a refresh 18; the caps keep the headroom they had over the
+#: earlier 50 and 18 (19 and 3). The floors catch jobs that escape the
+#: run's job group, such as a worker thread that did not inherit it.
 EP1_JOB_BUDGET = 69
 EP1_JOB_FLOOR = 30
 REFRESH_JOB_BUDGET = 21
@@ -85,6 +101,20 @@ def raising(message, delay=0.0):
         raise RuntimeError(message)
 
     return build
+
+
+def forbid_list_frames(monkeypatch):
+    """Make ``createDataFrame`` over a Python list or tuple raise. Such a
+    frame is a Python-RDD scan: the job that reads it starts the pyspark
+    daemon and Python workers."""
+    create = SparkSession.createDataFrame
+
+    def guarded(self, data, *args, **kwargs):
+        if isinstance(data, (list, tuple)):
+            raise AssertionError("createDataFrame over a Python list")
+        return create(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", guarded)
 
 
 def latest_date(spark, wh) -> str:
@@ -148,7 +178,16 @@ class TestRunPipeline:
             spark.conf.set(key, old)
         assert audit["status"] == "success", audit["error_message"]
 
-    def test_sheet_without_who_degrades_to_empty_tables(self, spark, tmp_path):
+    def test_ep1_and_refresh_start_no_python_worker(self, spark, tmp_path, monkeypatch):
+        forbid_list_frames(monkeypatch)
+        wh = str(tmp_path / "warehouse")
+        audit = run_pipeline(spark, FIXTURE, wh, alerts_enabled=True)
+        assert audit["status"] == "success", audit["error_message"]
+        rows = build_marts(spark, wh, dates=[latest_date(spark, wh)])
+        assert set(rows) == set(MARTS) and all(rows.values())
+
+    def test_sheet_without_who_degrades_to_empty_tables(self, spark, tmp_path, monkeypatch):
+        forbid_list_frames(monkeypatch)
         with open(FIXTURE, newline="", encoding="utf-8") as f:
             rows = list(csv.reader(f))
         who = rows[0].index("Who")
@@ -207,6 +246,33 @@ class TestBuildMarts:
 
         assert rows["mart_song_rehearsal"] == 2
         assert snapshot(spark, wh, "mart_song_rehearsal") == before
+
+    def test_typed_and_string_inputs_build_equal_marts(self, spark, ep1):
+        """The marts render a DATE rehearsal_date as its ISO string and
+        parse a string-typed one (C1); both give the same rows, numbers
+        included."""
+        wh, *_ = ep1
+        typed = dict(zip(MART_INPUT_TABLES, read_tables(spark, wh, MART_INPUT_TABLES)))
+        fact = typed["fact_attendance"].schema
+        assert isinstance(fact["rehearsal_date"].dataType, DateType)
+        strings = {
+            t: df.select([F.col(c).cast("string") for c in df.columns])
+            for t, df in typed.items()
+        }
+        inputs = {
+            build_mart_attendance: [
+                "dim_chorister", "dim_chorister_assignment", "fact_attendance"
+            ],
+            build_mart_song_rehearsal: ["dim_song", "fact_song_time"],
+            build_mart_chorister_song: MART_INPUT_TABLES,
+        }
+        for build, names in inputs.items():
+            from_typed = build(*(typed[n] for n in names))
+            from_strings = build(*(strings[n] for n in names))
+            assert from_typed.dtypes == from_strings.dtypes, build.__name__
+            assert sorted(map(tuple, from_typed.collect()), key=repr) == sorted(
+                map(tuple, from_strings.collect()), key=repr
+            ), build.__name__
 
     def test_missing_input_table_is_named(self, spark, ep1, tmp_path):
         wh, *_ = ep1

@@ -1,12 +1,16 @@
-"""Every top-level package definition is reachable from an entry point.
+"""Every top-level package definition and module constant is reachable
+from an entry point.
 
 The entry points are the package's module-level code (the ``QUERIES``,
 ``ORACLES`` and ``ARTIFACT_BUILDERS`` registries, the pipeline CLI's
 ``main()`` call), ``__spark_entry__.py``, ``bench.py``, ``perfbench/``
 and ``tools/``. Reachability is an identifier fixed point over source
 text: a definition is reached when its name appears in a root or in the
-source of a reached definition. Import statements and ``__all__`` lists
-are not uses, so a definition that only tests call is reported.
+source of a reached definition. A module-level assignment to plain
+names (a constant, a table, a compiled pattern) is a definition of each
+name, not a root, so a constant that no reached code reads is reported
+too. Import statements and ``__all__`` lists are not uses, so a
+definition that only tests call is reported.
 """
 
 from __future__ import annotations
@@ -18,6 +22,26 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 WORD = re.compile(r"[A-Za-z_]\w*")
 DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _assigned_names(stmt: ast.stmt) -> list[str]:
+    """The names a module-level ``NAME = ...`` (or ``NAME: T = ...``)
+    binds; [] for any other statement, a subscript or attribute store
+    included (that is a use of the object it stores into). Dunder
+    names, read by tooling, are not constants."""
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, ast.AnnAssign):
+        targets = [stmt.target]
+    else:
+        return []
+    names = []
+    for t in targets:
+        elts = t.elts if isinstance(t, (ast.Tuple, ast.List)) else [t]
+        if not all(isinstance(e, ast.Name) for e in elts):
+            return []
+        names += [e.id for e in elts]
+    return [] if any(n.startswith("__") for n in names) else names
 
 
 def _is_use(stmt: ast.stmt) -> bool:
@@ -39,6 +63,8 @@ def _split(path: Path) -> tuple[dict[str, str], set[str]]:
         seg = "\n".join(lines[first - 1 : stmt.end_lineno])
         if isinstance(stmt, DEF):
             defs[f"{path.relative_to(ROOT)}::{stmt.name}"] = seg
+        elif names := _assigned_names(stmt):
+            defs |= {f"{path.relative_to(ROOT)}::{n}": seg for n in names}
         elif _is_use(stmt):
             rest |= set(WORD.findall(seg))
     return defs, rest

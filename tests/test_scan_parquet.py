@@ -2,7 +2,9 @@
 enables: the footer schema equals Spark's inferred schema on every
 case, the fallbacks keep Spark's own inference, ``text.split_count``
 probes a bare scan without a job, and building the interactive query
-mix over existing artifacts runs no job outside k-means."""
+mix over existing artifacts runs no job outside k-means. Plus
+``sources.io.local_frame``: driver rows come back as given, in the
+given schema, from a LocalRelation that runs no job."""
 
 from __future__ import annotations
 
@@ -16,9 +18,11 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ursa_major_choir_etl_spark.operators.text import split_count, widen_if_narrow
 from ursa_major_choir_etl_spark.sources.io import (
+    local_frame,
     read_parquet_table,
     read_tables,
     scan_parquet,
@@ -191,3 +195,36 @@ def test_query_mix_plans_run_no_job_outside_kmeans(spark):
         _, jobs[q] = with_jobs(spark, QUERIES[by_short[q]], spark, SF)
         release_staged()
     assert jobs == {q: KMEANS_PLAN_JOBS.get(q, 0) for q in MIX}
+
+
+class TestLocalFrame:
+    DDL = "name string, n int, big long, dates array<string>"
+    ROWS = [
+        ('Мария "Маша" Дидуренко', 1, 2**40, ["2024-06-16"]),
+        ("Полина 'Калач'", None, -(2**62), []),
+        (None, -7, None, None),
+        ("", 0, 0, ["", None]),
+    ]
+
+    def test_rows_come_back_as_given_in_the_schema(self, spark):
+        df = local_frame(spark, self.ROWS, self.DDL)
+        assert df.schema == StructType.fromDDL(self.DDL)
+        assert [tuple(r) for r in df.collect()] == self.ROWS
+
+    @pytest.mark.parametrize("as_struct", [False, True])
+    def test_empty_rows_keep_the_schema(self, spark, as_struct):
+        schema = StructType.fromDDL(self.DDL) if as_struct else self.DDL
+        df = local_frame(spark, [], schema)
+        assert df.schema == StructType.fromDDL(self.DDL)
+        assert df.collect() == []
+
+    def test_plans_a_local_relation_and_runs_no_job(self, spark):
+        def build_and_collect():
+            df = local_frame(spark, self.ROWS, self.DDL)
+            plan = df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+            return plan, df.collect()
+
+        (plan, rows), jobs = with_jobs(spark, build_and_collect)
+        assert plan == "LocalRelation"
+        assert len(rows) == len(self.ROWS)
+        assert jobs == 0

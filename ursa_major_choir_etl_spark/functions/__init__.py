@@ -12,7 +12,6 @@ from ursa_major_choir_etl_spark.functions.columns import (
     normalize_name,
     parse_decimal_comma,
     rate_icon,
-    safe_float,
     safe_str,
     voice_part_and_active,
 )
@@ -20,7 +19,6 @@ from ursa_major_choir_etl_spark.functions.columns import (
 __all__ = [
     "normalize_date_to_iso",
     "parse_decimal_comma",
-    "safe_float",
     "safe_str",
     "flag",
     "date_iso",

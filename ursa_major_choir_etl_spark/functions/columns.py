@@ -6,8 +6,9 @@ path never leaves the JVM.
 
 Reference parity notes (file:line cites are into /root/reference):
 - C1  normalize_date_to_iso   <- etl/fact_attendance.py:20-45 (dup etl/marts.py:9-36)
-- C2/C3/C4 decimal-comma parse <- etl/fact_attendance.py:59-92,
-  etl/fact_song_time.py:28-40, etl/marts.py:39-47
+- C2/C3 decimal-comma parse   <- etl/fact_attendance.py:59-92,
+  etl/fact_song_time.py:28-40 (C4, etl/marts.py:39-47, is a plain
+  cast in the marts: the warehouse keeps numbers numeric)
 - C5  safe_str                <- etl/marts.py:50-53
 - C6  flag                    <- etl/alerts.py:15-28
 - C8  date_iso                <- etl/alerts.py:31-37
@@ -136,11 +137,6 @@ def parse_decimal_comma(c: Column | str) -> Column:
     """
     s = F.trim(_col(c).cast("string"))
     return F.regexp_replace(s, ",", ".").try_cast("double")
-
-
-def safe_float(c: Column | str, default: float = 0.0) -> Column:
-    """Lenient float with default (reference C4)."""
-    return F.coalesce(parse_decimal_comma(c), F.lit(default))
 
 
 def safe_str(c: Column | str) -> Column:

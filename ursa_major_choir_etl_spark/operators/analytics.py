@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ursa_major_choir_etl_spark.functions.columns import date_iso, flag, safe_str
+from ursa_major_choir_etl_spark.sources.io import local_frame
 
 
 def normalize_available_rows(mart_attendance: DataFrame) -> DataFrame:
@@ -59,7 +60,8 @@ def compute_missed_streaks(
     rows = normalize_available_rows(mart_attendance)
     start = window_start(rows, lookback_weeks)
     spark = mart_attendance.sparkSession
-    empty = spark.createDataFrame(
+    empty = local_frame(
+        spark,
         [],
         "chorister_id string, full_name string, voice_part string, tgid string,"
         " last_attended_date string, streak_len long, missed_dates array<string>",

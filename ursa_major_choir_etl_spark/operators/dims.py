@@ -25,7 +25,11 @@ from ursa_major_choir_etl_spark.functions.columns import (
     safe_str,
     voice_part_and_active,
 )
-from ursa_major_choir_etl_spark.sources.io import INPUT_ROW_ID, has_required_columns
+from ursa_major_choir_etl_spark.sources.io import (
+    INPUT_ROW_ID,
+    has_required_columns,
+    local_frame,
+)
 
 DIM_CHORISTER_COLUMNS = [
     "chorister_id",
@@ -71,7 +75,7 @@ def _empty(df: DataFrame, columns: list[str], extra: str = "") -> DataFrame:
     schema = ", ".join(f"`{c}` string" for c in columns)
     if extra:
         schema += ", " + extra
-    return df.sparkSession.createDataFrame([], schema)
+    return local_frame(df.sparkSession, [], schema)
 
 
 def chorister_rows(raw: DataFrame) -> DataFrame:
@@ -172,7 +176,8 @@ def build_dim_chorister_assignment(raw: DataFrame, dim_chorister: DataFrame) -> 
     norm_ids = normalized_to_chorister_id(dim_chorister)
     rows = rows.join(F.broadcast(norm_ids), on="normalized_name", how="left")
 
-    overrides = spark.createDataFrame(
+    overrides = local_frame(
+        spark,
         CHORISTER_ASSIGNMENT_OVERRIDES,
         "normalized_name string, ov_voice_part string, ov_valid_from string, ov_valid_to string",
     )
@@ -192,7 +197,7 @@ def build_dim_chorister_assignment(raw: DataFrame, dim_chorister: DataFrame) -> 
 
     vp = voice_part_and_active(F.col("_tag"))
     derived = (
-        rows.join(F.broadcast(overrides.select("normalized_name").distinct()),
+        rows.join(F.broadcast(overrides.select("normalized_name")),
                   on="normalized_name", how="left_anti")
         .withColumn("_vp", vp)
         .select(

@@ -34,17 +34,8 @@ from ursa_major_choir_etl_spark.sources.io import (
     INPUT_ROW_ID,
     PLACEHOLDER_PREFIX,
     has_required_columns,
+    local_frame,
 )
-
-FACT_ATTENDANCE_COLUMNS = [
-    "rehearsal_date",
-    "chorister_id",
-    "hours_attended",
-    "missed_flag",
-    "load_ts",
-]
-
-FACT_SONG_TIME_COLUMNS = ["rehearsal_date", "song_id", "minutes_spent", "load_ts"]
 
 
 def _py_normalize_date(s: str) -> str:
@@ -142,7 +133,8 @@ def build_fact_attendance(
     """
     spark = raw.sparkSession
     if not has_required_columns(raw, ["Tag", "Joined", "Who"]):
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "rehearsal_date string, chorister_id string, hours_attended double,"
             " missed_flag int, load_ts string",
@@ -220,7 +212,8 @@ def build_fact_song_time(raw: DataFrame, dim_song: DataFrame, run_ts: str) -> Da
     """
     spark = raw.sparkSession
     if not has_required_columns(raw, ["Tag", "Who"]):
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "rehearsal_date string, song_id string, minutes_spent double, load_ts string",
         )

@@ -18,46 +18,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType
 
 from ursa_major_choir_etl_spark.functions.columns import (
     normalize_date_to_iso,
-    safe_float,
     safe_str,
 )
-
-MART_ATTENDANCE_COLUMNS = [
-    "rehearsal_date",
-    "chorister_id",
-    "full_name",
-    "joined_date",
-    "voice_part",
-    "tgid",
-    "is_active",
-    "hours_attended",
-    "attended_flag",
-    "missed_flag",
-    "available_flag",
-]
-
-MART_SONG_REHEARSAL_COLUMNS = [
-    "rehearsal_date",
-    "song_id",
-    "song_name",
-    "minutes_spent",
-    "hours_spent",
-]
-
-MART_CHORISTER_SONG_COLUMNS = [
-    "rehearsal_date",
-    "chorister_id",
-    "full_name",
-    "joined_date",
-    "voice_part",
-    "song_id",
-    "song_name",
-    "minutes_spent",
-    "hours_spent",
-]
 
 
 def _norm_or_raw(c) -> F.Column:
@@ -65,6 +31,23 @@ def _norm_or_raw(c) -> F.Column:
     (reference: etl/marts.py:150-152)."""
     iso = normalize_date_to_iso(c)
     return F.when(iso != "", iso).otherwise(safe_str(c))
+
+
+def _date_or_raw(df: DataFrame, c: str) -> F.Column:
+    """``df[c]`` as the mart's date string. A DATE column (the
+    warehouse's fact_attendance) renders as its ISO string, which is
+    what :func:`_norm_or_raw` makes of it; a string-typed date (the raw
+    header dates of fact_song_time, a degraded fact_attendance) is
+    parsed."""
+    if isinstance(df.schema[c].dataType, DateType):
+        return F.coalesce(F.col(c).cast("string"), F.lit(""))
+    return _norm_or_raw(c)
+
+
+def _number(c: str, default: float = 0.0) -> F.Column:
+    """``c`` as a double, null -> ``default``. The warehouse keeps hours,
+    flags and minutes numeric (DEVIATIONS item 1), so a cast suffices."""
+    return F.coalesce(F.col(c).cast("double"), F.lit(default))
 
 
 def asof_assignment(
@@ -144,10 +127,10 @@ def build_mart_attendance(
         )
 
     fact = fact_attendance.select(
-        _norm_or_raw("rehearsal_date").alias("rehearsal_date_iso"),
+        _date_or_raw(fact_attendance, "rehearsal_date").alias("rehearsal_date_iso"),
         safe_str("chorister_id").alias("chorister_id"),
-        safe_float("hours_attended").alias("hours_attended"),
-        F.when(safe_float("missed_flag", 0.0) != 0.0, 1).otherwise(0).alias(
+        _number("hours_attended").alias("hours_attended"),
+        F.when(_number("missed_flag") != 0.0, 1).otherwise(0).alias(
             "missed_flag"
         ),
     )
@@ -194,9 +177,9 @@ def build_mart_song_rehearsal(
         safe_str("song_name").alias("_song_name"),
     ).filter(F.col("song_id") != "")
     fact = fact_song_time.select(
-        _norm_or_raw("rehearsal_date").alias("rehearsal_date"),
+        _date_or_raw(fact_song_time, "rehearsal_date").alias("rehearsal_date"),
         safe_str("song_id").alias("song_id"),
-        safe_float("minutes_spent").alias("minutes_spent"),
+        _number("minutes_spent").alias("minutes_spent"),
     )
     return fact.join(F.broadcast(dim), on="song_id", how="left").select(
         "rehearsal_date",
@@ -223,9 +206,9 @@ def build_mart_chorister_song(
     """
     attending = (
         fact_attendance.select(
-            _norm_or_raw("rehearsal_date").alias("rehearsal_date_iso"),
+            _date_or_raw(fact_attendance, "rehearsal_date").alias("rehearsal_date_iso"),
             safe_str("chorister_id").alias("chorister_id"),
-            safe_float("hours_attended").alias("_hours"),
+            _number("hours_attended").alias("_hours"),
         )
         .filter((F.col("rehearsal_date_iso") != "") & (F.col("_hours") > 0))
         .select("rehearsal_date_iso", "chorister_id")
@@ -233,9 +216,9 @@ def build_mart_chorister_song(
     )
 
     songs = fact_song_time.select(
-        _norm_or_raw("rehearsal_date").alias("rehearsal_date_iso"),
+        _date_or_raw(fact_song_time, "rehearsal_date").alias("rehearsal_date_iso"),
         safe_str("song_id").alias("song_id"),
-        safe_float("minutes_spent").alias("minutes_spent"),
+        _number("minutes_spent").alias("minutes_spent"),
     ).filter(F.col("rehearsal_date_iso") != "")
 
     # Resolve the as-of voice part BEFORE the attendee x song fan-out:

@@ -21,6 +21,7 @@ from ursa_major_choir_etl_spark.operators.facts import (
     date_columns_iso,
     raw_date_headers,
 )
+from ursa_major_choir_etl_spark.sources.io import local_frame
 
 BAD_CELLS_COLUMNS = [
     "entity_type",
@@ -42,7 +43,7 @@ def build_bad_cells(raw: DataFrame, run_ts: str) -> DataFrame:
     observable without changing fact_song_time's semantics).
     """
     spark = raw.sparkSession
-    empty = spark.createDataFrame([], ", ".join(f"{c} string" for c in BAD_CELLS_COLUMNS))
+    empty = local_frame(spark, [], ", ".join(f"{c} string" for c in BAD_CELLS_COLUMNS))
     if not {"Tag", "Who"} <= set(raw.columns):
         return empty
 

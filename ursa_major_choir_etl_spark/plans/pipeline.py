@@ -52,6 +52,7 @@ from ursa_major_choir_etl_spark.operators.quality import build_bad_cells
 from ursa_major_choir_etl_spark.session import get_spark
 from ursa_major_choir_etl_spark.sources.io import (
     append_parquet,
+    local_frame,
     overwrite_parquet,
     read_parquet_table,
     read_tables,
@@ -137,7 +138,8 @@ def run_pipeline(
         **{f"rows_{t}": counts.get(t, 0) for t in MART_INPUT_TABLES},
         "error_message": error_message,
     }
-    audit_df = spark.createDataFrame(
+    audit_df = local_frame(
+        spark,
         [tuple(audit.values())],
         ", ".join(f"{k} {'long' if k.startswith('rows_') else 'string'}" for k in audit),
     )

@@ -36,10 +36,33 @@ from pyspark.sql import functions as F
 
 INPUT_ROW_ID = "input_row_id"
 
-#: Fixed leading columns of the RAW wide sheet; date columns follow by
-#: position (reference: etl/fact_attendance.py:16-17 DATE_COLUMNS_START_INDEX=4).
-RAW_FIXED_COLUMNS = ["Tag", "Joined", "tgid", "Who"]
+#: Date columns of the RAW wide sheet follow its four fixed leading
+#: columns (Tag, Joined, tgid, Who) by position
+#: (reference: etl/fact_attendance.py:16-17 DATE_COLUMNS_START_INDEX=4).
 DATE_COLUMNS_START_INDEX = 4
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
+    """A driver-side table: ``rows`` in ``schema`` (a StructType or DDL string).
+
+    ``createDataFrame`` over a Python list plans a Python-RDD scan, so
+    the first job that reads it starts the pyspark daemon and Python
+    workers, even for one row. An Arrow table is handed to the JVM
+    instead and planned as a ``LocalRelation``: building, broadcasting
+    and collecting it run no Spark job and no Python worker.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def read_wide_sheet_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -86,8 +109,8 @@ def with_file_order_ids(df: DataFrame, id_col: str = INPUT_ROW_ID) -> DataFrame:
         acc += r["cnt"]
     if not offsets:
         return df.withColumn(id_col, F.lit(None).cast("long"))
-    off_df = df.sparkSession.createDataFrame(
-        offsets, f"{pid_col} int, {off_col} long, {min_col} long"
+    off_df = local_frame(
+        df.sparkSession, offsets, f"{pid_col} int, {off_col} long, {min_col} long"
     )
     return (
         tagged.join(F.broadcast(off_df), pid_col)
@@ -141,11 +164,7 @@ def read_wide_sheet_json(
     )
     header_rows = raw.filter(F.col(INPUT_ROW_ID) == 0).collect()
     if not header_rows:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        return spark.createDataFrame(
-            [], StructType([StructField(INPUT_ROW_ID, LongType())])
-        )
+        return local_frame(spark, [], f"{INPUT_ROW_ID} long")
     header = clean_header(header_rows[0]["cells"])
     # F.get is 0-based and returns null out-of-bounds even under ANSI
     # (element_at would raise) — short rows pad with nulls for free.
@@ -389,7 +408,7 @@ def overwrite_parquet(
             raise
         rows = 0
     if rows == 0 and partition_by and not dynamic:
-        df.sparkSession.createDataFrame([], df.schema).write.mode("overwrite").parquet(path)
+        local_frame(df.sparkSession, [], df.schema).write.mode("overwrite").parquet(path)
     return rows
 
 
