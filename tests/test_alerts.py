@@ -160,6 +160,14 @@ class TestFormatAlertMessage:
         assert "0%" in msg2
         assert "\U0001f534" in msg2
 
+    def test_rate_icon_band_edges(self):
+        """Rate icon bands (C12, reference etl/alerts.py:186-192): below
+        50% red, 50-65% yellow, above 65% green."""
+        red, yellow, green = "\U0001f534", "\U0001f7e1", "\U0001f7e2"
+        for rate, icon in [(0.49, red), (0.50, yellow), (0.65, yellow), (0.66, green)]:
+            first = format_alert_message([], 5, 3, attendance_rate=rate).splitlines()[0]
+            assert first.startswith(icon), (rate, first)
+
 
 class TestFlagTypeDispatch:
     """C6 parity with reference _flag (etl/alerts.py:15-28): numeric

@@ -1,5 +1,5 @@
 """Unit checks of the choir ETL's building blocks: the scalar column
-functions (reference C5/C8/K3/C9/C12), header hygiene, the chorister
+functions (reference C5/C8/K3/C9), header hygiene, the chorister
 dimension's row filters and id rules (F1-F3, K1, K5), the as-of
 assignment join (J2) and the alert engine's input normalisation (F4,
 W1). The end-to-end tests in test_pipeline.py see these only through
@@ -13,7 +13,6 @@ from datetime import date
 from ursa_major_choir_etl_spark.functions.columns import (
     date_iso,
     normalize_name,
-    rate_icon,
     safe_str,
     voice_part_and_active,
 )
@@ -86,11 +85,6 @@ class TestScalarColumns:
             ("bass", True),
             ("", False),
         ]
-
-    def test_rate_icon_band_edges(self, spark):
-        red, yellow, green = "\U0001f534", "\U0001f7e1", "\U0001f7e2"
-        got = _apply(spark, rate_icon, [0.0, 49.9, 50.0, 65.0, 65.1, 100.0], "v double")
-        assert got == [red, red, yellow, yellow, green, green]
 
 
 class TestHeaderHygiene:

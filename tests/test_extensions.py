@@ -171,24 +171,6 @@ class TestSimilarity:
         recall = len(exact & ivf) / len(exact)
         assert recall >= 0.5  # 2 of 3 cells probed; must be non-trivial
 
-    def test_lsh_recall_vs_brute(self, spark):
-        from ursa_major_choir_etl_spark.plans.queries import T
-
-        emb = T(spark, "/root/testdata/sf0.001", "embeddings")
-        queries = emb.filter(F.col("vec_id") < 5)
-        exact = {
-            (r["query_id"], r["neighbor_id"])
-            for r in similarity.cosine_topk(emb, queries, k=3).collect()
-        }
-        approx = {
-            (r["query_id"], r["neighbor_id"])
-            for r in similarity.lsh_topk(
-                emb, queries, k=10, num_hash_tables=5, bucket_length=4.0
-            ).collect()
-        }
-        recall = len(exact & approx) / len(exact)
-        assert recall >= 0.6  # approximate, but must be non-trivial
-
 
 class TestMultimodal:
     def test_decode_schema_and_determinism(self, docs):
@@ -229,29 +211,6 @@ class TestConnectedComponents:
 
 
 class TestSampling:
-    def test_stratified_fractions_and_determinism(self, spark):
-        from ursa_major_choir_etl_spark.operators.sampling import stratified_sample
-
-        docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-        fracs = {"en": 0.5, "de": 0.1}  # others dropped
-        s1 = stratified_sample(docs, "lang", fracs, seed=7)
-        s2 = stratified_sample(docs, "lang", fracs, seed=7)
-        assert sorted(r["doc_id"] for r in s1.select("doc_id").collect()) == sorted(
-            r["doc_id"] for r in s2.select("doc_id").collect()
-        )
-        got = {
-            r["lang"]: r["n"]
-            for r in s1.groupBy("lang").agg(F.count("*").alias("n")).collect()
-        }
-        base = {
-            r["lang"]: r["n"]
-            for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()
-        }
-        assert set(got) <= {"en", "de"}  # allowlist semantics
-        for lang, frac in fracs.items():
-            rate = got.get(lang, 0) / base[lang]
-            assert abs(rate - frac) < 0.1, (lang, rate)
-
     def test_hash_split_stable_under_growth(self, spark):
         from ursa_major_choir_etl_spark.operators.sampling import split_train_eval
 
@@ -289,47 +248,6 @@ class TestGroupedMap:
         assert got[("b", 7.0)] == 0.5
         # input df not corrupted by schema construction
         assert df.columns == ["g", "v"]
-
-
-class TestHllSketches:
-    def test_rollup_matches_exact_within_tolerance(self, spark, tmp_path_factory):
-        from ursa_major_choir_etl_spark.operators import sketches as sk
-
-        li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
-        per_month = sk.distinct_sketches(
-            li.withColumn("month", F.date_trunc("month", "l_shipdate")),
-            ["month"], "l_orderkey",
-        )
-        # sketches persist as ordinary binary parquet columns
-        p = str(tmp_path_factory.mktemp("sk")) + "/t"
-        per_month.write.parquet(p)
-        per_month = spark.read.parquet(p)
-
-        def rollup(*cols):
-            return per_month.groupBy(*cols).agg(
-                F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("approx_distinct")
-            )
-
-        # merged global estimate vs exact — no rescan of lineitem
-        est = rollup().collect()[0]["approx_distinct"]
-        exact = li.select("l_orderkey").distinct().count()
-        assert abs(est - exact) / exact < 0.05, (est, exact)
-
-        # per-month estimates track exact counts too
-        got = {
-            r["month"]: r["approx_distinct"]
-            for r in rollup("month").collect()
-        }
-        exact_m = {
-            r["month"]: r["n"]
-            for r in li.withColumn("month", F.date_trunc("month", "l_shipdate"))
-            .groupBy("month")
-            .agg(F.countDistinct("l_orderkey").alias("n"))
-            .collect()
-        }
-        assert set(got) == set(exact_m)
-        for m, e in exact_m.items():
-            assert abs(got[m] - e) / max(e, 1) < 0.05, (m, got[m], e)
 
 
 class TestCountMinSketch:
@@ -684,21 +602,6 @@ class TestStarConnectedComponents:
 
 
 class TestMultimodalAudioEmbed:
-    def test_audio_windows_fanout_and_determinism(self, docs):
-        from ursa_major_choir_etl_spark.operators import multimodal
-
-        blobs = multimodal.with_fake_blob(docs.limit(20))
-        a = multimodal.audio_features_stub(blobs, window_bytes=64).collect()
-        b = multimodal.audio_features_stub(blobs, window_bytes=64).collect()
-        assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-        by_doc = {}
-        for r in a:
-            by_doc.setdefault(r["doc_id"], []).append(r)
-        for rows in by_doc.values():
-            assert [r["window_idx"] for r in sorted(rows, key=lambda r: r["window_idx"])] == list(range(len(rows)))
-            for r in rows:
-                assert r["rms"] >= 0.0 and r["zero_crossings"] >= 0
-
     def test_embed_unit_norm_and_pipeline(self, spark, docs):
         import math
 
@@ -1313,42 +1216,6 @@ class TestLogQuantileSketch:
             assert exact_disc < lo + width * 2  # lo + width upper bound, slack 1 bucket
 
 
-class TestResizeStub:
-    def test_geometry_and_determinism(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "x" * 500), (2, "abcdef" * 100)], "doc_id long, text string"
-        )
-        blobs = multimodal.with_fake_blob(docs)
-        out = {r["doc_id"]: r for r in multimodal.resize_image_stub(blobs).collect()}
-        assert set(out) == {1, 2}
-        for r in out.values():
-            assert (r["width"], r["height"]) == (32, 32)
-            assert len(r["pixels"]) == 32 * 32
-        # deterministic byte-for-byte
-        again = {
-            r["doc_id"]: r["pixels"]
-            for r in multimodal.resize_image_stub(blobs).collect()
-        }
-        assert {k: v["pixels"] for k, v in out.items()} == again
-
-    def test_nearest_neighbor_reference(self, spark):
-        """Spot-check one payload against a numpy reference resize."""
-        import numpy as np
-
-        text = "pqrs" * 300  # n=1200 -> w=64+(1200%64)=56? compute in test
-        docs = spark.createDataFrame([(7, text)], "doc_id long, text string")
-        row = multimodal.resize_image_stub(
-            multimodal.with_fake_blob(docs), out_w=8, out_h=8
-        ).collect()[0]
-        blob = text.encode()
-        n = len(blob)
-        w, h = 64 + (n % 64), 64 + ((n // 64) % 64)
-        grid = np.resize(np.frombuffer(blob, dtype=np.uint8), h * w).reshape(h, w)
-        yi = (np.arange(8) * h) // 8
-        xi = (np.arange(8) * w) // 8
-        assert row["pixels"] == grid[np.ix_(yi, xi)].tobytes()
-
-
 class TestBloomPositionFuzz:
     def test_positions_match_hashlib_on_random_strings(self, spark):
         """One DataFrame, 60 random-ish strings x 3 hashes: the shared
@@ -1496,44 +1363,6 @@ class TestDuplicateSpansBruteForce:
         }
         assert want  # planted duplicates really exist
         assert got == want
-
-
-class TestRemoveSpans:
-    def test_cuts_match_python_slicing(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "0123456789abcdefghij"), (2, "untouched text here")],
-            "doc_id long, text string",
-        )
-        spans = spark.createDataFrame(
-            [(1, 2, 5, 1), (1, 10, 14, 1)],
-            "doc_id long, span_start int, span_end int, n_grams int",
-        )
-        out = {
-            r["doc_id"]: r["text"]
-            for r in dedup.remove_spans(docs, spans).collect()
-        }
-        src = "0123456789abcdefghij"
-        assert out[1] == src[:2] + src[5:10] + src[14:]
-        assert out[2] == "untouched text here"
-
-    def test_composes_with_duplicate_spans(self, spark):
-        """End-to-end: detect duplicated substrings, cut them, and the
-        planted shared block is gone from every doc."""
-        import random
-
-        rng = random.Random(5)
-        uniq = lambda n: "".join(rng.choice("xyzvw") for _ in range(n))
-        block = "SHARED-BLOCK-" * 4
-        docs = spark.createDataFrame(
-            [(1, uniq(30) + block + uniq(30)), (2, block + uniq(40))],
-            "doc_id long, text string",
-        )
-        spans = dedup.duplicate_spans(docs, k=20, stride=1)
-        cleaned = {
-            r["doc_id"]: r["text"]
-            for r in dedup.remove_spans(docs, spans).collect()
-        }
-        assert all("SHARED-BLOCK-" not in t for t in cleaned.values())
 
 
 class TestRound7AdviceFixes:

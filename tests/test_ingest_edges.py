@@ -29,11 +29,22 @@ def _write(tmp_path, name, content):
     return str(p)
 
 
+def _read_values(spark, tmp_path, values):
+    """Save ``values`` as a Sheets ``values.get`` payload and ingest it
+    through the JSON connector."""
+    import json
+
+    from ursa_major_choir_etl_spark.sources.io import read_wide_sheet_json
+
+    return read_wide_sheet_json(
+        spark, _write(tmp_path, "payload.json", json.dumps({"values": values}))
+    )
+
+
 class TestValuesIngest:
-    def test_values_shape_matches_csv_path(self, spark):
-        """The in-memory values adapter (Sheets get_values shape)
-        produces the same dims as the CSV path for equivalent data."""
-        from ursa_major_choir_etl_spark.sources.io import read_wide_sheet_values
+    def test_values_shape_matches_csv_path(self, spark, tmp_path):
+        """A saved values payload (Sheets get_values shape) produces
+        the dims the CSV path produces for equivalent data."""
 
         values = [
             ["Tag", "Joined", "tgid", "Who", "16.06.24", "23.06.24"],
@@ -43,7 +54,7 @@ class TestValuesIngest:
             ["Song", "", "", "Калинка", "30", ""],
             ["Bass", 45460, None, "Серийный", 2, 2.5],  # non-string cells
         ]
-        raw = read_wide_sheet_values(spark, values)
+        raw = _read_values(spark, tmp_path, values)
         dc = build_dim_chorister(raw, "TS")
         ids = [r["chorister_id"] for r in dc.orderBy("input_row_id").collect()]
         assert ids == ["Иван", "Анна", "Иван | 16.06.24", "Серийный"]
@@ -54,24 +65,17 @@ class TestValuesIngest:
         ).collect()[0]
         assert anna["hours_attended"] == 2.5
 
-    def test_cross_path_equality_on_fixture(self, spark):
-        """Feed the SAME fixture through both ingest paths; every
-        builder output must be row-identical (no literals — the CSV
-        path itself is the expectation)."""
+    def test_cross_path_equality_on_fixture(self, spark, tmp_path):
+        """Feed the SAME fixture through the JSON and CSV ingest paths;
+        every builder output must be row-identical (no literals — the
+        CSV path itself is the expectation)."""
         import csv
-
-        from ursa_major_choir_etl_spark.operators.facts import (
-            build_fact_song_time,
-        )
-        from ursa_major_choir_etl_spark.sources.io import read_wide_sheet_values
 
         values = [
             [c if c != "" else None for c in row]
             for row in csv.reader(open("tests/fixtures/raw_wide.csv"))
         ]
-        raw_v = read_wide_sheet_values(spark, values)
-        from ursa_major_choir_etl_spark.sources.io import read_wide_sheet_csv
-
+        raw_v = _read_values(spark, tmp_path, values)
         raw_c = read_wide_sheet_csv(spark, "tests/fixtures/raw_wide.csv")
 
         def outputs(raw):
@@ -87,22 +91,18 @@ class TestValuesIngest:
         for a, b in zip(outputs(raw_v), outputs(raw_c)):
             assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
-    def test_hostile_headers(self, spark):
+    def test_hostile_headers(self, spark, tmp_path):
         """None/duplicate/backtick/reserved headers must not crash and
         must not leak phantom date columns (reference skips unusable
         headers; dict index is last-wins for duplicates)."""
-        from ursa_major_choir_etl_spark.operators.facts import (
-            build_fact_song_time,
-            raw_date_headers,
-        )
-        from ursa_major_choir_etl_spark.sources.io import read_wide_sheet_values
+        from ursa_major_choir_etl_spark.operators.facts import raw_date_headers
 
         values = [
             ["Tag", "x`y", "tgid", "Who", "16.06.24", None, "input_row_id", "Tag"],
             ["Bass", "16.06.24", "", "Иван", "2", "99", "7", "LAST-TAG"],
             ["Song", "", "", "Калинка", "30", "55", "1", "Song?"],
         ]
-        raw = read_wide_sheet_values(spark, values)
+        raw = _read_values(spark, tmp_path, values)
         # duplicate "Tag": last occurrence keeps the name (dict last-wins)
         assert raw.columns.index("Tag") == 7
         # None header and reserved name become placeholders, not dates.
@@ -118,10 +118,8 @@ class TestValuesIngest:
         fst = build_fact_song_time(raw, ds, "TS")
         assert fst.count() == 0
 
-    def test_empty_values(self, spark):
-        from ursa_major_choir_etl_spark.sources.io import read_wide_sheet_values
-
-        raw = read_wide_sheet_values(spark, [])
+    def test_empty_values(self, spark, tmp_path):
+        raw = _read_values(spark, tmp_path, [])
         assert raw.count() == 0
 
 
@@ -246,8 +244,8 @@ class TestFileOrderIds:
 
 
 class TestSheetValuesDataSource:
-    """The custom Python DataSource (sources/sheets_source.py) must be
-    row-for-row identical to the in-memory values ingest path."""
+    """The custom Python DataSource (sources/sheets_source.py) behind
+    the JSON ingest path."""
 
     VALUES = [
         ["Tag", "Joined", "tgid", "Who", "1.10.24", None, "8.10.24", "Tag"],
@@ -265,18 +263,49 @@ class TestSheetValuesDataSource:
             json.dump({"values": self.VALUES}, f)
         return p
 
-    def test_matches_in_memory_path(self, spark, tmp_path):
+    def test_header_hygiene_and_padding(self, spark, tmp_path):
+        """Placeholders for the earlier duplicate and the None header,
+        short rows padded with nulls, cells past the header dropped."""
         from ursa_major_choir_etl_spark.sources.io import (
+            PLACEHOLDER_PREFIX,
             read_wide_sheet_json,
-            read_wide_sheet_values,
         )
 
-        via_ds = read_wide_sheet_json(spark, self._dump(tmp_path))
-        via_mem = read_wide_sheet_values(spark, self.VALUES)
-        assert via_ds.columns == via_mem.columns
-        a = sorted(map(tuple, via_ds.collect()), key=lambda t: t[-1])
-        b = sorted(map(tuple, via_mem.collect()), key=lambda t: t[-1])
-        assert a == b
+        df = read_wide_sheet_json(spark, self._dump(tmp_path))
+        p = PLACEHOLDER_PREFIX
+        assert df.columns == [
+            f"{p}0", "Joined", "tgid", "Who", "1.10.24", f"{p}5", "8.10.24", "Tag",
+            "input_row_id",
+        ]
+        got = sorted(map(tuple, df.collect()), key=lambda t: t[-1])
+        assert got == [
+            ("S1", "01.09.24", "123", "Анна С", "1", "x", None, None, 0),
+            ("A2", None, "", "Борис", None, "y", "0,5", "extra", 1),
+            (None,) * 8 + (2,),
+            ("T3",) + (None,) * 7 + (3,),
+        ]
+
+    @pytest.mark.parametrize(
+        "n_rows, num_partitions", [(0, 4), (1, 4), (5, 4), (9, 2)],
+        ids=["empty", "one-row", "fewer-rows-than-splits", "more-rows-than-splits"],
+    )
+    def test_splits_cover_each_row_once(self, tmp_path, n_rows, num_partitions):
+        """The reader's contiguous ranges emit every payload row exactly
+        once, in order, in at most ``numPartitions`` splits (one empty
+        split for an empty payload)."""
+        import json
+
+        from ursa_major_choir_etl_spark.sources.sheets_source import SheetValuesReader
+
+        values = [[f"r{i}", str(i)] for i in range(n_rows)]
+        path = _write(tmp_path, "payload.json", json.dumps({"values": values}))
+        reader = SheetValuesReader({"path": path, "numPartitions": str(num_partitions)})
+        splits = reader.partitions()
+        assert 1 <= len(splits) <= max(min(num_partitions, n_rows), 1)
+        assert splits[0].start == 0 and splits[-1].end == n_rows
+        assert all(a.end == b.start for a, b in zip(splits, splits[1:]))
+        rows = [r for s in splits for r in reader.read(s)]
+        assert rows == [(i, v) for i, v in enumerate(values)]
 
     def test_partitioned_read_same_ids(self, spark, tmp_path):
         from ursa_major_choir_etl_spark.sources.io import read_wide_sheet_json
@@ -304,47 +333,3 @@ class TestSheetValuesDataSource:
         assert row1[2][5] == "y"          # strings preserved
         assert row1[1][6] is None         # None preserved, not padded here
         assert row1[3] == []              # empty row intact
-
-
-class TestSheetValuesStreaming:
-    def test_incremental_append_across_restarts(self, spark, tmp_path):
-        import json, os
-
-        from ursa_major_choir_etl_spark.sources.sheets_source import register
-
-        register(spark)
-        p = os.path.join(str(tmp_path), "payload.json")
-        ckpt = os.path.join(str(tmp_path), "ckpt")
-        seen: list[tuple] = []
-
-        def dump(rows):
-            with open(p, "w") as f:
-                json.dump({"values": rows}, f)
-
-        def drain():
-            q = (
-                spark.readStream.format("sheet_values")
-                .option("path", p)
-                .load()
-                .writeStream.foreachBatch(
-                    lambda df, _: seen.extend(
-                        (r["input_row_id"], tuple(r["cells"])) for r in df.collect()
-                    )
-                )
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(60)
-
-        dump([["h1", "h2"], ["a", "1"], ["b", "2"]])
-        drain()
-        assert sorted(r[0] for r in seen) == [0, 1, 2]
-
-        # append two rows; a NEW query on the SAME checkpoint emits
-        # only the delta (offset replay through readBetweenOffsets)
-        dump([["h1", "h2"], ["a", "1"], ["b", "2"], ["c", "3"], ["d", None]])
-        drain()
-        assert sorted(r[0] for r in seen) == [0, 1, 2, 3, 4]
-        by_id = dict(seen)
-        assert by_id[4] == ("d", None)

@@ -80,6 +80,59 @@ class TestJpegCodec:
         assert m._decode_jpeg_one(prog) is None
 
 
+class TestJpegPrimitives:
+    def test_dct_matrix_is_orthonormal_and_scales_dc_to_8x_mean(self):
+        M = m._jpeg_dct_matrix()
+        assert np.allclose(M @ M.T, np.eye(8), atol=1e-12)
+        coef = M @ np.full((8, 8), 37.0) @ M.T
+        assert coef[0, 0] == pytest.approx(8 * 37.0)
+        coef[0, 0] = 0.0
+        assert np.abs(coef).max() < 1e-12
+
+    def test_category_and_extend_invert_each_other(self):
+        """Every coefficient the encoder can emit survives the
+        (category, magnitude bits) split and EXTEND (ITU-T.81 F.2.2.1)."""
+        for v in range(-2047, 2048):
+            s = m._category(v)
+            assert s == abs(v).bit_length()
+            bits = v if v >= 0 else v + (1 << s) - 1
+            assert 0 <= bits < (1 << s)
+            assert m._extend(bits, s) == v
+
+    def test_huffman_codes_roundtrip_through_byte_stuffing(self):
+        """Canonical codes from the encoder's DC/AC specs, interleaved
+        with magnitude bits, decode back through the reader once the
+        writer's 0xFF 0x00 stuffing is removed (as the scan decoder does)."""
+        import random
+
+        dc_pairs, ac_pairs, _ = m._jpeg_huff_specs()
+        dc_table, ac_table = m._huff_canonical(dc_pairs), m._huff_canonical(ac_pairs)
+        dc_codes = {sym: key for key, sym in dc_table.items()}
+        ac_codes = {sym: key for key, sym in ac_table.items()}
+        rnd = random.Random(7)
+        coefs = [rnd.randrange(-1023, 1024) for _ in range(200)]
+        ac_syms = [rnd.choice(ac_pairs)[0] for _ in range(200)]
+        w = m._BitWriter()
+        w.put(0xFF, 8)
+        for v, sym in zip(coefs, ac_syms):
+            s = m._category(v)
+            ln, code = dc_codes[s]
+            w.put(code, ln)
+            w.put(v if v >= 0 else v + (1 << s) - 1, s)
+            ln, code = ac_codes[sym]
+            w.put(code, ln)
+        w.pad_to_byte()
+        out = bytes(w.out)
+        assert out.startswith(b"\xff\x00")
+        assert all(out[i + 1] == 0 for i in range(len(out) - 1) if out[i] == 0xFF)
+        r = m._BitReader(out.replace(b"\xff\x00", b"\xff"))
+        assert r.read(8) == 0xFF
+        for v, sym in zip(coefs, ac_syms):
+            s = m._huff_decode(r, dc_table)
+            assert (m._extend(r.read(s), s) if s else 0) == v
+            assert m._huff_decode(r, ac_table) == sym
+
+
 class TestPngCodec:
     @pytest.mark.parametrize("mode", ["none", "cycle"])
     @pytest.mark.parametrize("shape", [(5, 9), (6, 4, 3), (3, 7, 4)])

@@ -98,8 +98,8 @@ class TestBmpDecode:
             got = np.array([r["mean_b"], r["mean_g"], r["mean_r"]])
             assert np.allclose(got, want, atol=1e-12)
 
-    def test_top_down_and_32bpp_agree_with_bottom_up_24bpp(self, spark):
-        from ursa_major_choir_etl_spark.operators.multimodal import resize_bmp
+    def test_top_down_and_32bpp_agree_with_bottom_up_24bpp(self):
+        from ursa_major_choir_etl_spark.operators.multimodal import _decode_bmp_one
 
         rng = np.random.RandomState(11)
         g = rng.randint(0, 256, (6, 4, 3), dtype=np.uint8)
@@ -108,12 +108,12 @@ class TestBmpDecode:
             make_bmp(g, bpp=24, top_down=True),
             make_bmp(g, bpp=32, top_down=False),
         ]
-        rows = resize_bmp(blob_df(spark, variants), out_w=4, out_h=6).collect()
-        assert len(rows) == 3
-        pix = {r["doc_id"]: bytes(r["pixels"]) for r in rows}
-        # identity-size resize of the same logical image from all three
-        # encodings must reproduce the SAME original pixel grid
-        assert pix[0] == pix[1] == pix[2] == g.tobytes()
+        # the decoder behind decode_bmp_stats must reproduce the SAME
+        # original pixel grid from all three encodings
+        for blob in variants:
+            w, h, _, px = _decode_bmp_one(blob)
+            assert (w, h) == (4, 6)
+            assert px.tobytes() == g.tobytes()
 
     def test_non_bmp_degrades_to_invalid_row(self, spark):
         from ursa_major_choir_etl_spark.operators.multimodal import decode_bmp_stats

@@ -164,74 +164,6 @@ class TestPretrainingFunnel:
         assert st["decontaminate"]["n_docs"] == 1
 
 
-class TestRemoveSpansAgainstRealDetector:
-    def test_matches_python_mirror_on_sf01_detector_output(self, spark):
-        """remove_spans driven by the REAL q105 detector at sf0.1 (the
-        bench scale), not a hand-built fixture: detector output
-        includes adjacent/run-merged spans and doc-end clamps, and the
-        cleaned text must equal a plain Python cut of the same sorted
-        ranges for EVERY affected doc (round-7 verdict hardening
-        item)."""
-        import os
-
-        from ursa_major_choir_etl_spark.operators import dedup
-        from ursa_major_choir_etl_spark.plans.queries import T
-
-        sf = "/root/testdata/sf0.1"
-        if not os.path.isdir(sf):
-            sf = "/root/testdata/sf0.01"
-        docs = T(spark, sf, "documents")
-        spans = dedup.duplicate_spans(docs, k=40)
-        span_rows = spans.collect()
-        assert span_rows, "detector found no spans — fixture too small"
-        by_doc: dict[int, list[tuple[int, int]]] = {}
-        for r in span_rows:
-            by_doc.setdefault(r["doc_id"], []).append(
-                (r["span_start"], r["span_end"])
-            )
-        # Contract check: detector spans are sorted, non-overlapping,
-        # non-adjacent-mergeable (gap > 0 after the island merge).
-        for sl in by_doc.values():
-            sl.sort()
-            for (s1, e1), (s2, e2) in zip(sl, sl[1:]):
-                assert e1 <= s2, "detector emitted overlapping spans"
-
-        affected = sorted(by_doc)
-        texts = {
-            r["doc_id"]: r["text"]
-            for r in docs.filter(F.col("doc_id").isin(affected))
-            .select("doc_id", "text")
-            .collect()
-        }
-        cleaned = {
-            r["doc_id"]: r["text"]
-            for r in dedup.remove_spans(
-                docs.filter(F.col("doc_id").isin(affected)), spans
-            ).collect()
-        }
-        for d in affected:
-            t = texts[d]
-            out, p = [], 0
-            for s, e in by_doc[d]:
-                out.append(t[p:s])
-                p = e
-            out.append(t[p:])
-            assert cleaned[d] == "".join(out), f"doc {d} mismatch"
-
-    def test_untouched_docs_pass_through(self, spark):
-        from ursa_major_choir_etl_spark.operators import dedup
-
-        docs = spark.createDataFrame(
-            [(1, "short doc"), (2, "x" * 100)], "doc_id long, text string"
-        )
-        spans = spark.createDataFrame(
-            [(2, 10, 50)], "doc_id long, span_start long, span_end long"
-        )
-        got = {r["doc_id"]: r["text"] for r in dedup.remove_spans(docs, spans).collect()}
-        assert got[1] == "short doc"
-        assert got[2] == "x" * 10 + "x" * 50
-
-
 class TestSemanticDedupSkew:
     def test_mega_cluster_matches_brute_force(self, spark):
         """Skew fixture (round-7 verdict hardening item): ONE k-means

@@ -79,6 +79,12 @@ def _write(path, data: bytes) -> None:
         f.write(data)
 
 
+def _exited_pid() -> int:
+    p = subprocess.Popen(["true"])
+    p.wait()
+    return p.pid
+
+
 class TestOption:
     def test_fresh_checkout_launches_plain_then_dumps_into_an_empty_conf_dir(self, host):
         archive = _archive(host)
@@ -88,12 +94,32 @@ class TestOption:
         assert os.listdir(host.cds / "conf") == []
         # the dumping JVM still runs: its file has no magic yet
         assert os.path.getsize(archive) == 0
+        with open(archive[:-4] + ".pid") as f:
+            assert int(f.read()) == os.getpid()
+
+    @pytest.mark.parametrize("head", [b"", b"\0" * 64], ids=["placeholder", "dump-in-progress"])
+    def test_dump_in_progress_is_left_alone(self, host, head):
+        """A launch while the dumping process runs is plain, writes no
+        failure and keeps the dump's file."""
+        archive = _archive(host)
+        session._cds_option({})
+        session._cds_option({})  # records this (live) process as the dumper
+        _write(archive, head)
+        before = sorted(os.listdir(host.cds))
+        for _ in range(2):
+            assert session._cds_option({}) is None
+        assert sorted(os.listdir(host.cds)) == before
+        assert not os.path.exists(archive[:-4] + ".failed")
+        with open(archive, "rb") as f:
+            assert f.read() == head
 
     def test_archive_with_magic_is_used(self, host):
+        session._cds_option({})
         session._cds_option({})
         _write(_archive(host), MAGIC + b"\0" * 60)
         for _ in range(2):
             assert session._cds_option({}) == f'-XX:SharedArchiveFile="{_archive(host)}" -Xlog:cds*=off'
+        assert set(os.listdir(host.cds)) == {"conf", os.path.basename(_archive(host))}
 
     @pytest.mark.parametrize(
         "head", [b"\0" * 64, b"", b"\xa8\xab"], ids=["zero-filled", "empty", "half-written"]
@@ -104,10 +130,12 @@ class TestOption:
         session._cds_option({})
         assert session._cds_option({}).startswith("-XX:ArchiveClassesAtExit=")
         _write(archive, head)
+        session._record_dumper(archive, _exited_pid())
         assert session._cds_option({}) is None
         assert not os.path.exists(archive) and os.path.exists(failed)
         assert session._cds_option({}).startswith("-XX:ArchiveClassesAtExit=")
         _write(archive, head)
+        session._record_dumper(archive, _exited_pid())
         for _ in range(3):
             assert session._cds_option({}) is None
         with open(archive, "rb") as f:
@@ -136,6 +164,34 @@ class TestOption:
         blocker.write_text("")
         monkeypatch.setattr(session, "CDS_DIR", str(blocker / ".spark-cds"))
         assert session._cds_option({}) is None
+
+
+class TestDumperRecord:
+    """The ``<key>.pid`` record that tells a dump in progress from a
+    failed one."""
+
+    @pytest.mark.parametrize(
+        "record, runs",
+        [(None, False), ("live", True), ("exited", False), ("not-a-pid", False)],
+        ids=["no-record", "live", "exited", "garbage"],
+    )
+    def test_dumper_runs(self, tmp_path, record, runs):
+        archive = str(tmp_path / "k.jsa")
+        if record == "live":
+            session._record_dumper(archive, os.getpid())
+        elif record == "exited":
+            session._record_dumper(archive, _exited_pid())
+        elif record is not None:
+            (tmp_path / "k.pid").write_text(record)
+        assert session._dumper_runs(archive) is runs
+
+    def test_record_replaces_the_previous_dumper(self, tmp_path):
+        archive = str(tmp_path / "k.jsa")
+        session._record_dumper(archive, _exited_pid())
+        session._record_dumper(archive, os.getpid())
+        assert os.listdir(tmp_path) == ["k.pid"]  # no temporary file left
+        assert (tmp_path / "k.pid").read_text() == str(os.getpid())
+        assert session._dumper_runs(archive)
 
 
 class _Builder:

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ursa_major_choir_etl_spark.operators.skew import salted_aggregate, salted_join
+from ursa_major_choir_etl_spark.operators.skew import salted_aggregate
 
 
 @pytest.fixture(scope="module")
@@ -58,24 +58,3 @@ class TestSaltedAggregate:
             .count()
         )
         assert partial_groups == 16  # hot key really fans out
-
-
-class TestSaltedJoin:
-    def test_matches_plain_join(self, spark, skewed):
-        dim = spark.range(100).select(
-            F.col("id").alias("k"), F.concat(F.lit("name_"), F.col("id")).alias("nm")
-        )
-        plain = (
-            skewed.join(dim, on="k", how="inner")
-            .groupBy("k", "nm")
-            .count()
-            .collect()
-        )
-        salted = (
-            salted_join(skewed, dim, on="k", buckets=8, spread_col="uid")
-            .groupBy("k", "nm")
-            .count()
-            .collect()
-        )
-        assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
-

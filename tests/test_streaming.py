@@ -1,7 +1,7 @@
 """Streaming jobs driven over a file source, results cross-checked
 against the batch operators on the same data (stream/batch symmetry).
-The stateless gates drain into a memory sink in append mode; the store
-sinks are read back through their ``read_*`` views.
+The store sinks are read back through their ``read_*`` views; the
+card store, which only its registry query reads, is read raw.
 """
 
 from __future__ import annotations
@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ursa_major_choir_etl_spark.sources.io import read_parquet_table
 from ursa_major_choir_etl_spark.streaming import jobs
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -112,47 +113,6 @@ class TestStreamingQuantileSketch:
         assert merged2 == whole
 
 
-class TestStreamingNearDup:
-    def test_stream_pairs_match_batch_bucketed(self, spark, tmp_path_factory):
-        """The drained ingestion alert stream (deduped across bands)
-        equals the batch banded near-dup pair set on the same data at
-        the same planes/threshold."""
-        from ursa_major_choir_etl_spark.operators import similarity as sim
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        src = str(tmp_path_factory.mktemp("vec_stream"))
-        emb.coalesce(2).write.mode("overwrite").parquet(src)
-
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        out = jobs.streaming_embedding_near_dup(
-            stream, emb, threshold=0.4, planes_per_band=4, n_bands=16
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("neardup_t")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        got = {
-            (min(r["stream_id"], r["corpus_id"]), max(r["stream_id"], r["corpus_id"]))
-            for r in spark.table("neardup_t").collect()
-        }
-        want = {
-            (r["id_a"], r["id_b"])
-            for r in sim.near_duplicate_pairs_bucketed(
-                emb, threshold=0.4, planes_per_band=4, n_bands=16
-            ).collect()
-        }
-        assert want  # fixture produces pairs
-        assert got == want
-
-
 class TestStreamingCmsStore:
     def test_store_merges_to_batch_sketch_and_estimates(
         self, spark, tmp_path_factory
@@ -220,56 +180,16 @@ class TestStreamingCmsStore:
         assert merged2 == whole
 
 
-class TestStreamingIncrementalDedup:
-    def test_stream_verdicts_match_batch_probe(self, spark, tmp_path_factory):
-        """Drained ingestion-time dedup verdicts equal the batch
-        incremental probe's decisions on the same shard."""
-        from ursa_major_choir_etl_spark.operators import dedup as dd
-
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        corpus = docs.filter("doc_id % 5 != 0")
-        shard = docs.filter("doc_id % 5 = 0")
-
-        src = str(tmp_path_factory.mktemp("doc_stream"))
-        shard.select("doc_id", "text").repartition(3).write.mode(
-            "overwrite"
-        ).parquet(src)
-
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        out = jobs.streaming_incremental_dedup(stream, corpus)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("inc_dedup_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-        got = {
-            r["doc_id"]: (r["fingerprint"], r["dup_of"])
-            for r in spark.sql("select * from inc_dedup_out").collect()
-        }
-        want = {
-            r["doc_id"]: (r["fingerprint"], r["dup_of"])
-            for r in dd.incremental_dedup_probe(shard, corpus).collect()
-        }
-        assert got == want and len(got) == shard.count()
-
-
 class TestStreamingCardStore:
     def test_store_merges_to_batch_card(self, spark, tmp_path_factory):
-        """The merged streaming card equals the batch dataset card on
-        the additive metrics exactly; the three distinct metrics are
-        HLL estimates within the sketch's error bound of the exact
-        truth (a union result and a direct sketch may differ by a few
-        counts — Datasketches mode transitions — so equality is only
-        asserted against the EXACT batch values with 5% tolerance)."""
+        """Summed over the store, the per-batch card rows equal the
+        one-shot card row on the additive components exactly; the
+        unions of the three HLL sketch columns estimate the distinct
+        metrics within 5% of the exact batch truth (a union result and
+        a direct sketch may differ by a few counts — Datasketches mode
+        transitions — so equality is only asserted on exact values)."""
         from ursa_major_choir_etl_spark.operators.quality import (
+            card_batch_row,
             dataset_card,
         )
 
@@ -292,24 +212,30 @@ class TestStreamingCardStore:
         batches = [d for d in os.listdir(os.path.join(wh, "card")) if d.startswith("batch_id=")]
         assert len(batches) >= 2
 
-        got = {r["metric"]: r["value"] for r in jobs.read_card_store(spark, wh, "card").collect()}
+        additive = ("n_docs", "n_tokens", "n_en", "q_ppm_sum", "n_pii")
+        got = read_parquet_table(spark, wh, "card").agg(
+            *[F.sum(c).alias(c) for c in additive],
+            *[
+                F.hll_sketch_estimate(F.hll_union_agg(c)).alias(c)
+                for c in ("sources_hll", "langs_hll", "fp_hll")
+            ],
+        ).first()
+        oneshot = card_batch_row(docs).first()
         want = {r["metric"]: r["value"] for r in dataset_card(docs).collect()}
         from ursa_major_choir_etl_spark import caching
 
         caching.release_staged()
-        for m in ("n_docs", "n_tokens", "mean_doc_tokens", "pct_en_predicted",
-                  "mean_quality", "pii_doc_rate"):
-            assert got[m] == want[m], m
+        for c in additive:
+            assert got[c] == oneshot[c], c
         # Distinct metrics: within the HLL error bound of exact truth.
-        assert abs(got["n_sources_approx"] - want["n_sources"]) <= max(
+        assert abs(got["sources_hll"] - want["n_sources"]) <= max(
             1.0, 0.05 * want["n_sources"]
         )
-        assert abs(got["n_langs_predicted_approx"] - want["n_langs_predicted"]) <= max(
+        assert abs(got["langs_hll"] - want["n_langs_predicted"]) <= max(
             1.0, 0.05 * want["n_langs_predicted"]
         )
         exact_fp = (1.0 - want["exact_dup_rate"]) * want["n_docs"]
-        approx_fp = (1.0 - got["exact_dup_rate_approx"]) * got["n_docs"]
-        assert abs(approx_fp - exact_fp) <= 0.05 * exact_fp
+        assert abs(got["fp_hll"] - exact_fp) <= 0.05 * exact_fp
 
 
 class TestStreamingFuzzyDedupSink:
@@ -525,6 +451,16 @@ class TestStreamingDecayedEngagement:
 
 DOCS = f"{SF_DIR}/documents.parquet"
 
+
+def _card_rows(spark, wh: str):
+    """The card store's per-batch rows, each HLL sketch read as its
+    estimate."""
+    df = read_parquet_table(spark, wh, "store")
+    return df.select(
+        *[F.hll_sketch_estimate(c).alias(c) if c.endswith("_hll") else c for c in df.columns]
+    )
+
+
 #: store -> (start the sink on a docs stream, read the store's view).
 REPLAY_STORES = {
     "fuzzy_probe": (
@@ -542,7 +478,7 @@ REPLAY_STORES = {
         lambda spark, docs, wh, ckpt: jobs.streaming_card_sink(
             docs, wh, "store", checkpoint_dir=ckpt
         ),
-        lambda spark, wh: jobs.read_card_store(spark, wh, "store"),
+        _card_rows,
     ),
     "hll": (
         lambda spark, docs, wh, ckpt: jobs.streaming_hll_register_sink(

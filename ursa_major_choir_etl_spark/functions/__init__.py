@@ -11,7 +11,6 @@ from ursa_major_choir_etl_spark.functions.columns import (
     normalize_date_to_iso,
     normalize_name,
     parse_decimal_comma,
-    rate_icon,
     safe_str,
     voice_part_and_active,
 )
@@ -24,5 +23,4 @@ __all__ = [
     "date_iso",
     "normalize_name",
     "voice_part_and_active",
-    "rate_icon",
 ]

@@ -14,7 +14,8 @@ Reference parity notes (file:line cites are into /root/reference):
 - C8  date_iso                <- etl/alerts.py:31-37
 - K3  normalize_name          <- etl/dim_chorister.py:30-36
 - C9  voice_part_and_active   <- etl/dim_chorister.py:157-177
-- C12 rate_icon               <- etl/alerts.py:186-192
+- C12 rate icon               <- etl/alerts.py:186-192, inlined in
+  alerts.format_alert_message (a Python scalar, not a column)
 """
 
 from __future__ import annotations
@@ -200,14 +201,4 @@ def voice_part_and_active(tag: Column | str) -> Column:
     part = F.when(is_ex, F.lower(F.trim(after_ex))).otherwise(F.lower(raw))
     return F.struct(
         part.alias("voice_part"), (~is_ex).alias("is_active")
-    )
-
-
-def rate_icon(pct: Column | str) -> Column:
-    """Percentage -> status icon: <50 red, <=65 yellow, else green (C12)."""
-    p = _col(pct)
-    return (
-        F.when(p < 50, F.lit("\U0001f534"))
-        .when(p <= 65, F.lit("\U0001f7e1"))
-        .otherwise(F.lit("\U0001f7e2"))
     )

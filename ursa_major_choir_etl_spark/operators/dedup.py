@@ -9,7 +9,8 @@ Five families, each distributed-by-construction:
                buckets join on rotated prefixes
 - n-gram Jaccard: inverted shingle index self-join (classic candidate
                generation) with exact Jaccard on candidates
-- embedding cosine: see operators/similarity.py (near_duplicate_pairs)
+- embedding cosine: see operators/similarity.py
+               (near_duplicate_pairs_blocked / _bucketed)
 
 Determinism: all hashing is md5-derived (portable across engines) and
 every window orders by an explicit key — no engine-native hash()/rand().
@@ -903,55 +904,6 @@ def duplicate_spans(
         F.least(F.max("pos") + k, F.max("_len")).alias("span_end"),
         F.count(F.lit(1)).alias("n_grams"),
     ).drop("_isl")
-
-
-def remove_spans(
-    df: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Execute duplicate_spans' decisions: cut the (span_start,
-    span_end) char ranges out of each document and return the cleaned
-    corpus — (id, text) with every other column dropped.
-
-    Pure JVM: spans collect into a per-doc SORTED array (bounded by
-    the doc's own span count — a per-doc aggregate, not a corpus
-    funnel) and one ``aggregate`` HOF walks them with a
-    (cursor, output) struct accumulator, concatenating the kept
-    segments. Docs without spans pass through unchanged via the left
-    join. Spans are assumed non-overlapping and in-bounds per doc —
-    exactly what duplicate_spans emits.
-    """
-    sp = spans.groupBy(id_col).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("span_start").cast("int").alias("s"),
-                    F.col("span_end").cast("int").alias("e"),
-                )
-            )
-        ).alias("_sp")
-    )
-    joined = df.select(F.col(id_col), F.col(text_col)).join(sp, id_col, "left")
-    arr = F.coalesce(
-        F.col("_sp"), F.array().cast("array<struct<s:int,e:int>>")
-    )
-    t = F.col(text_col)
-    cleaned = F.aggregate(
-        arr,
-        F.struct(F.lit(0).alias("p"), F.lit("").alias("o")),
-        lambda a, s: F.struct(
-            s["e"].alias("p"),
-            F.concat(a["o"], F.substring(t, a["p"] + 1, s["s"] - a["p"])).alias(
-                "o"
-            ),
-        ),
-        lambda a: F.concat(
-            a["o"], F.substring(t, a["p"] + 1, F.length(t) - a["p"])
-        ),
-    )
-    return joined.select(F.col(id_col), cleaned.alias(text_col))
 
 
 def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

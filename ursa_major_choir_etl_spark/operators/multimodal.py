@@ -9,17 +9,18 @@ StructTypes.
 Codec coverage is honest and explicit:
 
 - REAL, no codec library needed: uncompressed BI_RGB BMP
-  (``decode_bmp_stats``/``resize_bmp``), RIFF/WAVE PCM
-  (``decode_wav_features``), baseline-sequential JPEG
+  (``decode_bmp_stats``), RIFF/WAVE PCM (``decode_wav_features``),
+  baseline-sequential JPEG
   (``encode_jpeg_baseline``/``decode_jpeg_stats`` — full ITU-T.81
   marker/Huffman/IDCT path in struct+numpy), and PNG
   (``encode_png``/``decode_png_stats`` — stdlib zlib inflate +
   scanline unfilter, CRC-verified). All verified against
   independently-built files and closed-form pixel/sample functions
   in tests and the q25x decode value gates.
-- STUBS, clearly marked (``_fake_decode_image`` etc.): formats whose
-  decode genuinely needs libraries this container does not ship
-  (progressive JPEG, MP3/AAC DSP, video codecs). The Spark plumbing
+- STUBS, clearly marked (``decode_image_metadata``,
+  ``embed_blob_stub``): formats whose decode genuinely needs codec
+  libraries the package does not depend on (progressive JPEG, MP3/AAC
+  DSP, video codecs). The Spark plumbing
   around them — schema, Arrow batching, 1->N fan-out — is
   production-real and swapping the inner kernel changes nothing
   else.
@@ -45,33 +46,16 @@ def with_fake_blob(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     return df.select(F.col(id_col), F.encode(F.col(text_col), "utf-8").alias("blob"))
 
 
-def _fake_decode_image(blob: bytes) -> dict:
-    """STUB decoder (reference semantics for one blob). Deterministic
-    metadata from the payload bytes.
-
-    ``decode_image_metadata`` computes exactly this arithmetic but
-    vectorized per Arrow batch; this per-row form is the swap point
-    for a REAL decoder — e.g. PIL.Image.open(io.BytesIO(blob)) in a
-    container that ships codecs; raise NotImplementedError there on
-    unsupported formats instead of guessing.
-    """
-    n = len(blob)
-    return {
-        "n_bytes": n,
-        "format": "fake/rgb8",
-        "width": 64 + (n % 64),
-        "height": 64 + ((n // 64) % 64),
-        "n_channels": 3,
-    }
-
-
 def decode_image_metadata(
     blobs: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
 ) -> DataFrame:
     """Arrow-batched decode: mapInPandas over (id, blob) -> metadata.
 
-    Per-batch pandas work, no per-row Python dispatch; partitioning of
-    the input is preserved (narrow transform)."""
+    STUB metadata: a fixed ``fake/rgb8`` format and a geometry derived
+    from the payload length, the swap point for a real decoder (e.g.
+    PIL.Image.open where codecs are installed). Per-batch pandas work,
+    no per-row Python dispatch; partitioning of the input is preserved
+    (narrow transform)."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -95,43 +79,6 @@ def decode_image_metadata(
             )
 
     return blobs.mapInPandas(decode, schema=IMAGE_META_SCHEMA)
-
-
-AUDIO_FEAT_SCHEMA = "doc_id long, window_idx int, rms double, zero_crossings int"
-
-
-def audio_features_stub(
-    blobs: DataFrame,
-    window_bytes: int = 256,
-    id_col: str = "doc_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """Audio feature-extraction plumbing: fixed-size windows over the
-    payload -> per-window RMS + zero-crossing count (1->N fan-out, the
-    torchaudio/librosa shape). STUB: features are computed over raw
-    payload bytes centered at 128 — swap the inner math for a real
-    PCM decode + feature kernel; schema/batching stay identical."""
-    import numpy as np
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, widx, rms, zc = [], [], [], []
-            for i, blob in zip(pdf[id_col].values, pdf[blob_col].values):
-                arr = np.frombuffer(blob, dtype=np.uint8).astype(np.float64) - 128.0
-                n_win = max(len(arr) // window_bytes, 1)
-                for w in range(n_win):
-                    seg = arr[w * window_bytes : (w + 1) * window_bytes]
-                    if len(seg) == 0:
-                        seg = np.zeros(1)
-                    ids.append(i)
-                    widx.append(w)
-                    rms.append(float(np.sqrt(np.mean(seg * seg))))
-                    zc.append(int(np.count_nonzero(np.diff(np.sign(seg)))))
-            yield pd.DataFrame(
-                {id_col: ids, "window_idx": widx, "rms": rms, "zero_crossings": zc}
-            )
-
-    return blobs.mapInPandas(feats, schema=AUDIO_FEAT_SCHEMA)
 
 
 def embed_blob_stub(
@@ -162,50 +109,6 @@ def embed_blob_stub(
 
     return blobs.mapInPandas(embed, schema=f"{id_col} long, embedding array<float>")
 
-
-def resize_image_stub(
-    blobs: DataFrame,
-    out_w: int = 32,
-    out_h: int = 32,
-    id_col: str = "doc_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """Image-resize plumbing: nearest-neighbor downsample of each
-    payload interpreted as the fake decoder's (height x width) byte
-    grid, emitting the resized bytes plus the output geometry — the
-    thumbnail/normalize stage between decode and embed. STUB pixel
-    semantics (real pipelines call PIL/cv2 here) but the Spark shape
-    is production-real: a narrow Arrow-batched mapInPandas, one
-    numpy fancy-index per row, binary in -> binary out, no shuffle.
-    """
-    import numpy as np
-
-    schema = f"{id_col} long, width int, height int, pixels binary"
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, pix = [], []
-            for rid, blob in zip(pdf[id_col].values, pdf[blob_col].values):
-                n = len(blob)
-                w = 64 + (n % 64)
-                h = 64 + ((n // 64) % 64)
-                grid = np.frombuffer(blob, dtype=np.uint8)
-                # pad/trim the payload to the fake decoder's geometry
-                grid = np.resize(grid, h * w).reshape(h, w)
-                yi = (np.arange(out_h) * h) // out_h
-                xi = (np.arange(out_w) * w) // out_w
-                ids.append(rid)
-                pix.append(grid[np.ix_(yi, xi)].tobytes())
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "width": out_w,
-                    "height": out_h,
-                    "pixels": pix,
-                }
-            )
-
-    return blobs.mapInPandas(resize, schema=schema)
 
 # ---------------------------------------------------------------------------
 # REAL decoders — formats parseable with stdlib struct + numpy alone.
@@ -315,41 +218,6 @@ def decode_bmp_stats(
     return blobs.mapInPandas(decode, schema=BMP_DECODE_SCHEMA)
 
 
-def resize_bmp(
-    blobs: DataFrame,
-    out_w: int = 32,
-    out_h: int = 32,
-    id_col: str = "doc_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """REAL resize over decoded BMP pixels: nearest-neighbor to
-    (out_h x out_w x 3), emitting the resized BGR bytes — the same
-    contract as resize_image_stub but on true pixel grids. Invalid
-    payloads are dropped (the stats operator is the quarantine
-    surface)."""
-    import numpy as np
-
-    schema = f"{id_col} long, width int, height int, pixels binary"
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, pix = [], []
-            for rid, blob in zip(pdf[id_col].values, pdf[blob_col].values):
-                dec = _decode_bmp_one(bytes(blob))
-                if dec is None:
-                    continue
-                w, h, _, px = dec
-                yi = (np.arange(out_h) * h) // out_h
-                xi = (np.arange(out_w) * w) // out_w
-                ids.append(rid)
-                pix.append(px[np.ix_(yi, xi)].tobytes())
-            yield pd.DataFrame(
-                {id_col: ids, "width": out_w, "height": out_h, "pixels": pix}
-            )
-
-    return blobs.mapInPandas(resize, schema=schema)
-
-
 WAV_DECODE_SCHEMA = (
     "doc_id long, valid boolean, sample_rate int, channels int,"
     " bits_per_sample int, n_frames long, rms double, peak int"
@@ -401,8 +269,7 @@ def decode_wav_features(
     blobs: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
 ) -> DataFrame:
     """REAL audio decode: RIFF/WAVE PCM parse -> format fields + exact
-    RMS / peak over the true samples (the audio_features_stub contract
-    on real PCM instead of raw payload bytes). Non-WAV payloads yield
+    RMS / peak over the true samples. Non-WAV payloads yield
     valid=false rows."""
     import numpy as np
 

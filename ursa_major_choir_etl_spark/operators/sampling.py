@@ -1,8 +1,10 @@
 """Sampling operators for training-data curation.
 
-Both are thin, deliberately: Spark's native sampling is already
-distributed and reproducible-with-seed; what a pipeline needs on top
-is the contract. Results are SAMPLES — not oracle-checkable against
+Spark's native sampling is already distributed and
+reproducible-with-seed; what a pipeline needs on top is the contract.
+``split_train_eval`` is the plain id-hash split, kept as the reference
+that ``split_train_eval_cluster_pure``'s singleton membership is tested
+against. Results are SAMPLES — not oracle-checkable against
 SQL — so the tests assert statistical properties (per-stratum rates,
 determinism, disjointness) rather than value hashes.
 """
@@ -11,21 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    fractions: dict,
-    seed: int = 42,
-) -> DataFrame:
-    """Per-stratum Bernoulli sample (e.g. downweight one language to
-    rebalance a corpus). ``fractions`` maps stratum value -> keep
-    probability; strata absent from the map are DROPPED (explicit
-    allowlist, so a new surprise stratum can't flood the sample).
-    Same seed + same input => same sample (reproducible curation).
-    """
-    return df.sampleBy(strata_col, fractions, seed=seed)
 
 
 def split_train_eval(

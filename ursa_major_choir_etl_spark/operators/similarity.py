@@ -4,10 +4,10 @@
                           set — broadcast the queries, scan the corpus
                           once, rank per query. The correctness
                           baseline.
-- near_duplicate_pairs:   all-pairs cosine >= threshold (bounded input)
-- lsh_topk:               the scale path — random-hyperplane LSH
-                          bucketing via pyspark.ml's
-                          BucketedRandomProjectionLSH; candidate
+- near_duplicate_pairs:   all-pairs cosine >= threshold (bounded input;
+                          the reference the blocked and bucketed
+                          scale paths are tested against)
+- sign_lsh_topk / ivf_topk: the approximate scale paths — candidate
                           generation is a bucket join, not a cross
                           product.
 
@@ -520,12 +520,12 @@ def sign_lsh_topk(
     cosine ranks the candidates (JVM fold, no Python in the scoring
     path).
 
-    vs ``lsh_topk`` (pyspark.ml BRP-LSH): same candidate-generation
-    shape — hash-bucket equi-joins, never a cross product — but the
-    buckets come from ``deterministic_planes``, so the whole result is
-    bit-reproducible in SQL and carries a full value oracle, not just
-    a recall test. A query with < k bucket-mates returns < k rows (the
-    honest ANN contract; recall targets are set by band geometry).
+    Candidate generation is hash-bucket equi-joins, never a cross
+    product, and the buckets come from ``deterministic_planes``, so
+    the whole result is bit-reproducible in SQL and carries a full
+    value oracle, not just a recall test. A query with < k bucket-mates
+    returns < k rows (the honest ANN contract; recall targets are set
+    by band geometry).
 
     Scale: the corpus side is one narrow signature pass + an explode
     keyed by (band, key); only ids travel through the candidate join,
@@ -758,61 +758,6 @@ def ivf_topk(
             F.round(cosine(F.col("_qv"), F.col("_cv")), 6).alias("cosine_sim"),
             "rank",
         )
-    )
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 3,
-) -> DataFrame:
-    """Approximate top-k via random-hyperplane bucketing
-    (pyspark.ml BucketedRandomProjectionLSH over euclidean distance;
-    for unit-normalized vectors euclidean rank == cosine rank).
-
-    The scale path: candidates come from hash-bucket equi-joins.
-    Output: (query_id, neighbor_id, dist, rank) — approximate, so no
-    SQL oracle; validated by containment tests against cosine_topk.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import Window
-
-    def norm_vec(df: DataFrame, out: str) -> DataFrame:
-        arr = F.col(vec_col).cast("array<double>")
-        n = l2_norm(arr)
-        # array_to_vector is a JVM expression - no Python UDF in the
-        # vectorization path.
-        return df.select(
-            F.col(id_col),
-            array_to_vector(F.transform(arr, lambda x: x / n)).alias(out),
-        )
-
-    c = norm_vec(corpus, "features")
-    q = norm_vec(queries, "features")
-    model = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=42,
-    ).fit(c)
-    joined = model.approxSimilarityJoin(q, c, 2.0, distCol="dist")
-    pairs = joined.select(
-        F.col(f"datasetA.{id_col}").alias("query_id"),
-        F.col(f"datasetB.{id_col}").alias("neighbor_id"),
-        F.round("dist", 6).alias("dist"),
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
     )
 
 

@@ -1,19 +1,18 @@
-"""Mergeable sketches: HLL cardinality (Apache DataSketches via
-Spark's built-in ``hll_*`` aggregates) and a portable count-min
-sketch for heavy-hitter frequencies — all JVM-side expressions.
+"""Mergeable sketches: a portable count-min sketch for heavy-hitter
+frequencies, a log-bucket quantile sketch and portable HyperLogLog
+registers — all JVM-side expressions.
 
-Why this exists at 100 TB: an exact COUNT(DISTINCT) re-shuffles the
-raw data every time someone asks at a new grain. A persisted
-per-partition HLL sketch (a few KB of binary per group) makes every
-coarser rollup an O(groups) merge of sketches — daily sketches union
-into weekly/monthly/global counts WITHOUT rescanning the fact table,
-and an incremental load only sketches the new partition. ~1-2%
-relative error at lg_k=12 (4 KB per sketch); raise lg_k for tighter
-bounds.
+Why this exists at 100 TB: an exact COUNT(DISTINCT) or frequency
+count re-shuffles the raw data every time someone asks at a new
+grain. A persisted per-partition sketch (a fixed-size table per
+group) makes every coarser rollup an O(groups) merge of sketches —
+daily sketches union into weekly/monthly/global answers WITHOUT
+rescanning the fact table, and an incremental load only sketches the
+new partition.
 
-Estimates are approximate, hence no DuckDB value-hash oracle; the
-tests bound the relative error against exact counts and verify the
-merge identity (union of per-day sketches == sketch of the whole).
+Estimates are approximate; the tests bound their error against exact
+answers and verify the merge identity (union of per-day sketches ==
+sketch of the whole).
 """
 
 from __future__ import annotations
@@ -22,25 +21,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def distinct_sketches(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    lgk: int = 12,
-) -> DataFrame:
-    """Per-group HLL sketch of ``value_col`` as a binary column —
-    the persistable building block (write it next to the partition it
-    summarizes). Columns: group_cols + ``sketch``."""
-    return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(value_col, F.lit(lgk)).alias("sketch")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Count-min sketch (mergeable heavy-hitter frequencies)
 # ---------------------------------------------------------------------------
 #
-# The frequency analogue of the HLL block above: a (depth x width) grid
+# The frequency analogue of an HLL sketch: a (depth x width) grid
 # of counters whose size is FIXED regardless of data volume, additive
 # under union (sketch(A ∪ B) = sketch(A) + sketch(B) cell-wise), with a
 # one-sided error guarantee (estimate >= true count always; overshoot
@@ -231,7 +216,7 @@ def portable_hll_registers(
 ) -> DataFrame:
     """Per-group PORTABLE HyperLogLog registers (m=256, md5-derived):
     bucket = first md5 byte, rank = 1 + leading zero bits of the next
-    56 — unlike the DataSketches binary of :func:`distinct_sketches`,
+    56 — unlike a DataSketches binary (Spark's ``hll_sketch_agg``),
     these registers are a plain (group, bucket, r) table any engine
     can rebuild bit-for-bit (the value-oracle requirement), and they
     merge by MAX like any HLL. Sparse: absent buckets mean r=0.

@@ -1,24 +1,16 @@
 """Skew-mitigation operators.
 
 AQE's skew-join splitting (on in session.py) handles most runtime skew;
-these utilities cover the two cases AQE can't:
-
-- salted_aggregate: a groupBy whose hot key overwhelms one reducer.
-  Two-phase: partial agg on (key, salt), final agg on key. Salt is
-  deterministic (hash of a spread column mod buckets) so runs are
-  reproducible.
-- salted_join: a big-side hot key joining a small-but-not-broadcastable
-  dim. Big side gets a deterministic salt; the dim is replicated once
-  per salt bucket (explode), restoring an equi-join with fan-out
-  bounded by ``buckets``.
-
-Both preserve exact semantics — tests compare against the unsalted
-plans row-for-row.
+salted_aggregate covers the case AQE can't: a groupBy whose hot key
+overwhelms one reducer. Two-phase: partial agg on (key, salt), final
+agg on key. Salt is deterministic (hash of a spread column mod
+buckets) so runs are reproducible, and the result is exact — tests
+compare against the unsalted plan row-for-row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: aggregate name -> (partial expr builder, final expr builder)
@@ -60,26 +52,6 @@ def salted_aggregate(
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    buckets: int = 8,
-    how: str = "inner",
-    spread_col: str | None = None,
-) -> DataFrame:
-    """Equi-join with the big side salted and the small side replicated
-    ``buckets`` times, so a hot join key spreads over ``buckets`` tasks.
-    """
-    spread = spread_col or next(c for c in big.columns if c != on)
-    big_s = big.withColumn("_salt", F.pmod(F.xxhash64(F.col(spread)), F.lit(buckets)))
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)).cast("array<bigint>"))
-    )
-    out = big_s.join(small_s, on=[on, "_salt"], how=how)
-    return out.drop("_salt")
-
-
 def join_key_skew_profile(
     df: DataFrame,
     key_cols: list[str],
@@ -92,8 +64,8 @@ def join_key_skew_profile(
     skew_x_mean_ppm = max_count / mean_count in ppm (1e6 = perfectly
     uniform). salt_recommended fires when the hot key exceeds
     ``salt_threshold_x_mean`` times the mean — the regime where one
-    reducer inherits the whole key and :func:`salted_join` /
-    :func:`salted_aggregate` (or AQE skew split) pays for itself.
+    reducer inherits the whole key and salting (:func:`salted_aggregate`)
+    or AQE's skew split pays for itself.
 
     Scale shape: ONE scan explodes (column, value) pairs — so
     profiling k columns costs one pass, not k — into one count

@@ -1315,8 +1315,9 @@ def q23_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus broadcast (the round-4 verdict's one scale-killer, retired):
     block-pair cogroup tasks each run one bounded GEMM, identical
     result set to the naive quadratic join. The broadcast GEMM
-    (similarity.near_duplicate_pairs) remains the bounded-corpus fast
-    path; the banded-LSH q76 is the sub-quadratic candidate path.
+    (similarity.near_duplicate_pairs) stays as the bounded-corpus
+    reference the blocked path is tested against; the banded-LSH q76
+    is the sub-quadratic candidate path.
     Served from the materialized pair artifact (producer query)."""
     return embedding_pairs_table(spark, sf_dir, threshold=0.4)
 
@@ -1339,9 +1340,7 @@ def q24_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates (md5-derived integer planes), exact-cosine ranking.
     Approximate in RECALL, deterministic in VALUE — so it carries a
     full SQL oracle (the bucket keys are bit-reproducible integer
-    arithmetic). The pyspark.ml BRP-LSH variant remains available as
-    similarity.lsh_topk with containment tests; this one is preferred
-    precisely because its results are engine-independently checkable.
+    arithmetic) and its results are engine-independently checkable.
     """
     emb = T(spark, sf_dir, "embeddings")
     return similarity.sign_lsh_topk(
@@ -2961,7 +2960,7 @@ def q65_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep probabilities using the portable md5 unit hash on doc_id —
     reproducible run-to-run AND engine-to-engine (a seeded rand()
     would be neither across engines). Absent sources are dropped
-    (allowlist, same contract as sampling.stratified_sample).
+    (allowlist: a source without a weight keeps nothing).
     Returns the kept docs' ids + per-source audit counts join key."""
     docs = T(spark, sf_dir, "documents")
     thresh = F.lit(None).cast("double")
@@ -4927,9 +4926,8 @@ def q106_dedup_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What substring dedup would DO to the corpus: per document, the
     original length, how many duplicated spans q105 finds, the chars
     they cover, and the post-cut length — the attrition report a
-    curation run reviews before actually cutting (dedup.remove_spans
-    executes the decisions). Every doc appears, clean docs with
-    zeros."""
+    curation run reviews before actually cutting. Every doc appears,
+    clean docs with zeros."""
     docs = T(spark, sf_dir, "documents")
     spans = dedup.duplicate_spans(docs, k=40, stride=1)
     per_doc = spans.groupBy("doc_id").agg(
@@ -17794,8 +17792,8 @@ def card_store_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     The artifact materializes ONLY the exact columns — the HLL
     distinct estimates stay covered by the drive parity test (a
     sketch union and a direct build can legitimately differ by a few
-    counts, so they cannot sit under a value hash; documented in
-    read_card_store)."""
+    counts — Datasketches mode transitions — so they cannot sit
+    under a value hash)."""
     from ursa_major_choir_etl_spark.streaming import jobs
 
     def read_exact(wh: str) -> DataFrame:

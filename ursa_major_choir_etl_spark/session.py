@@ -25,13 +25,17 @@ a ``<key>.seen`` marker, so a job that runs once in a fresh checkout
 launches as before and pays nothing. The next launch finds the marker
 and dumps the archive when its JVM exits (``-XX:ArchiveClassesAtExit``);
 that process is slower for its whole life and about 20 s longer at
-exit. A file at the key path without the dynamic-archive magic is a
-dump still running, refused or killed: it is deleted once (a
-``<key>.failed`` marker records that) and the cycle starts over; after
-that, the launch stays plain until ``.spark-cds`` is deleted. CDS
-refuses a non-empty directory on the classpath, so a launch with an
-archive points ``SPARK_CONF_DIR`` at the empty ``.spark-cds/conf``, and
-only when ``$SPARK_HOME/conf`` holds nothing but ``*.template`` files.
+exit. The dumping launch records its pid in ``<key>.pid`` (the Python
+process's until its JVM is up, then the JVM's, which outlives Python
+while it dumps). A file at the key path without the dynamic-archive
+magic is a dump still running while that pid runs: the launch is plain
+and touches nothing. Once the pid is gone, the file is a dump refused
+or killed: it is deleted once (a ``<key>.failed`` marker records that)
+and the cycle starts over; after that, the launch stays plain until
+``.spark-cds`` is deleted. CDS refuses a non-empty directory on the
+classpath, so a launch with an archive points ``SPARK_CONF_DIR`` at the
+empty ``.spark-cds/conf``, and only when ``$SPARK_HOME/conf`` holds
+nothing but ``*.template`` files.
 A conf dir or classpath from the environment, extra jars, an unwritable
 directory or an already running JVM mean today's launch. The JVM
 ignores a stale archive, but one cut short with its header intact (an
@@ -41,6 +45,7 @@ gateway dies at start, ``rm -rf .spark-cds``.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
 import shutil
@@ -97,6 +102,30 @@ def _cds_key(java_home: str, jars_dir: str, conf_dir: str) -> str:
     return h.hexdigest()[:16]
 
 
+def _pid_file(archive: str) -> str:
+    return archive[: -len(".jsa")] + ".pid"
+
+
+def _record_dumper(archive: str, pid: int) -> None:
+    """Atomically record ``pid`` as the process dumping ``archive``."""
+    tmp = f"{_pid_file(archive)}.{os.getpid()}"
+    with open(tmp, "w") as f:
+        f.write(str(pid))
+    os.replace(tmp, _pid_file(archive))
+
+
+def _dumper_runs(archive: str) -> bool:
+    """Whether the process recorded as dumping ``archive`` still runs."""
+    try:
+        with open(_pid_file(archive)) as f:
+            os.kill(int(f.read()), 0)
+    except PermissionError:  # it runs, as another user
+        return True
+    except (OSError, ValueError):  # no record, or no such process
+        return False
+    return True
+
+
 def _cds_option(conf: dict[str, str]) -> str | None:
     """The driver JVM option that maps this checkout's archive or dumps
     it at exit, or None for a plain launch.
@@ -123,7 +152,11 @@ def _cds_option(conf: dict[str, str]) -> str | None:
         if os.path.exists(archive):
             with open(archive, "rb") as f:
                 if f.read(4) == _CDS_MAGIC:
+                    with contextlib.suppress(FileNotFoundError):
+                        os.unlink(_pid_file(archive))  # the dump is over
                     return f'-XX:SharedArchiveFile="{archive}" {_CDS_QUIET}'
+            if _dumper_runs(archive):
+                return None
             # dropped once; after a second failure the launch stays plain
             open(os.path.join(CDS_DIR, f"{key}.failed"), "x").close()
             os.unlink(archive)
@@ -132,7 +165,8 @@ def _cds_option(conf: dict[str, str]) -> str | None:
         except FileNotFoundError:
             open(seen, "x").close()
             return None
-        # while this JVM lives, other launches find a file without magic
+        # while the dumper runs, other launches find a file without magic
+        _record_dumper(archive, os.getpid())
         open(archive, "x").close()
     except OSError:
         return None
@@ -220,5 +254,8 @@ def get_spark(
     finally:
         if cds:
             del os.environ["SPARK_CONF_DIR"]
+    if cds and cds.startswith("-XX:ArchiveClassesAtExit="):
+        # the JVM dumps at exit, possibly after this process has ended
+        _record_dumper(cds.split('"')[1], spark._jvm.java.lang.ProcessHandle.current().pid())
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -129,10 +129,10 @@ PLACEHOLDER_PREFIX = "__placeholder_"
 
 
 def clean_header(raw: list) -> list[str]:
-    """Header hygiene shared by the values/json ingest paths (mirrors
-    the reference's dict-index semantics, etl/dim_chorister.py:18-20):
-    empty/None and reserved names become positional placeholders;
-    duplicate names keep only the LAST occurrence (dict last-wins)."""
+    """Header hygiene of the JSON ingest path (mirrors the reference's
+    dict-index semantics, etl/dim_chorister.py:18-20): empty/None and
+    reserved names become positional placeholders; duplicate names keep
+    only the LAST occurrence (dict last-wins)."""
     raw_header = ["" if h is None else str(h) for h in raw]
     last_index: dict[str, int] = {h: i for i, h in enumerate(raw_header)}
     header = []
@@ -150,9 +150,9 @@ def read_wide_sheet_json(
     """Ingest a saved Sheets ``values.get`` JSON payload through the
     custom ``sheet_values`` DataSource (sources/sheets_source.py) —
     the connector-native S2/S3 path: range-partitioned parallel reads
-    with source-assigned stable ordinals, then the same header hygiene
-    and null padding as ``read_wide_sheet_values``. Output is
-    row-for-row identical to that in-memory path (tested)."""
+    with source-assigned stable ordinals, then header hygiene
+    (``clean_header``) and null padding of short rows. Output is
+    row-for-row identical to the CSV path for the same sheet (tested)."""
     from ursa_major_choir_etl_spark.sources.sheets_source import register
 
     register(spark)
@@ -172,43 +172,6 @@ def read_wide_sheet_json(
         *[F.get("cells", i).alias(h) for i, h in enumerate(header)],
         (F.col(INPUT_ROW_ID) - 1).alias(INPUT_ROW_ID),
     )
-
-
-def read_wide_sheet_values(spark: SparkSession, values: list[list]) -> DataFrame:
-    """Ingest the reference's native in-memory shape (S2 get_values:
-    first row header, rest data rows; short rows padded with nulls —
-    etl/gsheets.py:97-136) with a stable ``input_row_id``.
-
-    Header hygiene mirrors the reference's dict-index semantics
-    (etl/dim_chorister.py:18-20 _index_by_name):
-    - None/empty header cells -> positional placeholder (the column
-      exists so index-based date rules stay aligned, but no name
-      matches it — the reference skips such columns too);
-    - duplicate names: the LAST occurrence keeps the name (dict
-      last-wins), earlier ones become placeholders;
-    - a header colliding with the reserved input_row_id is
-      placeholdered.
-    Schema is built as a StructType, so header text can contain any
-    characters (backticks included).
-    """
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    if not values:
-        return spark.createDataFrame(
-            [], StructType([StructField(INPUT_ROW_ID, LongType())])
-        )
-    header = clean_header(values[0])
-    width = len(header)
-    rows = []
-    for i, row in enumerate(values[1:]):
-        cells = [None if v is None else str(v) for v in row[:width]]
-        cells += [None] * (width - len(cells))
-        rows.append((*cells, i))
-    schema = StructType(
-        [StructField(h, StringType()) for h in header]
-        + [StructField(INPUT_ROW_ID, LongType())]
-    )
-    return spark.createDataFrame(rows, schema)
 
 
 def has_required_columns(df: DataFrame, required: list[str]) -> bool:

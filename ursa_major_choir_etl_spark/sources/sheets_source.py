@@ -32,7 +32,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 SCHEMA = "input_row_id bigint, cells array<string>"
@@ -62,9 +61,6 @@ class SheetValuesDataSource(DataSource):
     def reader(self, schema) -> "SheetValuesReader":
         return SheetValuesReader(self.options)
 
-    def simpleStreamReader(self, schema) -> "SheetValuesStreamReader":
-        return SheetValuesStreamReader(self.options)
-
 
 class SheetValuesReader(DataSourceReader):
     def __init__(self, options):
@@ -79,7 +75,7 @@ class SheetValuesReader(DataSourceReader):
         # table), so this mirrors how file sources list splits.
         n = len(_load_values(self.path))
         k = max(min(self.n_partitions, n), 1)
-        step = (n + k - 1) // k
+        step = max((n + k - 1) // k, 1)  # an empty payload has no rows to split
         return [
             _RangePartition(lo, min(lo + step, n)) for lo in range(0, n, step)
         ] or [_RangePartition(0, 0)]
@@ -89,42 +85,6 @@ class SheetValuesReader(DataSourceReader):
         for i in range(partition.start, partition.end):
             row = values[i]
             yield (i, [None if c is None else str(c) for c in row])
-
-
-class SheetValuesStreamReader(SimpleDataSourceStreamReader):
-    """Micro-batch "poll the sheet for appended rows" reader.
-
-    Offset = ``{"row": n}``, the count of payload rows already emitted;
-    each batch reads rows [start, current length) and advances the
-    offset — exactly-once append semantics with checkpoint replay via
-    ``readBetweenOffsets``. The driver-side read matches this API's
-    contract (Simple readers are for sheet-sized inputs; the batch
-    reader above is the partitioned path)."""
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("sheet_values: option 'path' is required")
-        self.start_row = int(options.get("startRow", "0"))
-
-    def initialOffset(self) -> dict:
-        return {"row": self.start_row}
-
-    def _rows(self, lo: int, hi: int) -> list[tuple]:
-        # A LIST, not a generator: the engine pickles the prefetched
-        # batch to cache it for checkpoint replay.
-        values = _load_values(self.path)
-        return [
-            (i, [None if c is None else str(c) for c in values[i]])
-            for i in range(lo, min(hi, len(values)))
-        ]
-
-    def read(self, start: dict):
-        n = len(_load_values(self.path))
-        return self._rows(start["row"], n), {"row": max(n, start["row"])}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> list[tuple]:
-        return self._rows(start["row"], end["row"])
 
 
 def register(spark) -> None:

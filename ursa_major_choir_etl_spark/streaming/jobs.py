@@ -1,12 +1,5 @@
 """Streaming jobs on readStream sources: the store sinks behind the
-registry's streaming queries (q283, q289-q297) and two stateless
-ingestion gates.
-
-The gates (``streaming_embedding_near_dup``,
-``streaming_incremental_dedup``) are stream-static joins against a
-batch-built index: they hold no state store and need no watermark,
-and they return a streaming DataFrame whose sink and trigger the
-caller picks.
+registry's streaming queries (q283, q289-q297).
 
 The ``streaming_*_sink`` jobs start their own query: all of them
 drain the available input (availableNow trigger) through a
@@ -17,7 +10,7 @@ layouts:
 
 - **batch-keyed** (quantile, CMS, fuzzy-probe, card, rollup,
   decayed-engagement): partition ``batch_id=<id>`` holds that batch's
-  mergeable partial state; the ``read_*`` view merges all partitions.
+  mergeable partial state; the store's reader merges all partitions.
   A replayed batch overwrites its own partition, so an additive merge
   never double-counts.
 - **generation** (CC-label, HLL, presence): each batch merges the
@@ -247,77 +240,6 @@ def read_quantile_sketch_store(spark, warehouse: str, name: str) -> DataFrame:
     )
 
 
-def streaming_embedding_near_dup(
-    stream_vecs: DataFrame,
-    corpus: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes_per_band: int = 4,
-    n_bands: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-duplicate detection AT INGESTION: each arriving embedding
-    is sign-LSH banded (the deterministic integer planes shared with
-    q24/q76) and probes the STATIC corpus's bucket index; candidates
-    sharing a band bucket get an exact JVM cosine and matches above
-    the threshold are emitted as (stream_id, corpus_id, cosine_sim).
-
-    Stateless end to end: banding is an Arrow-batched narrow map
-    (mapInPandas runs fine on streaming DataFrames), the probe is a
-    stream-static equi-join on (band, key), and the verify is a
-    column expression — no state store, no watermark. A pair that
-    collides in several bands is emitted once per band (dedup is a
-    downstream choice: exact dedup needs cross-batch state, which
-    this alert stream deliberately avoids); self-matches are dropped.
-    """
-    from ursa_major_choir_etl_spark.operators.similarity import (
-        banded_signatures,
-        cosine,
-    )
-
-    index = banded_signatures(
-        corpus,
-        id_col=id_col,
-        vec_col=vec_col,
-        planes_per_band=planes_per_band,
-        n_bands=n_bands,
-        seed=seed,
-    ).select(
-        F.col("_id").alias("_cid"),
-        F.col("_v").alias("_cv"),
-        F.col("_band").alias("_cband"),
-        F.col("_key").alias("_ckey"),
-    )
-    probes = banded_signatures(
-        stream_vecs,
-        id_col=id_col,
-        vec_col=vec_col,
-        planes_per_band=planes_per_band,
-        n_bands=n_bands,
-        seed=seed,
-    )
-    # NO hard broadcast hint: the bucket index scales with the corpus
-    # (growth-class — the round-5 lesson); Spark's size threshold
-    # broadcasts it while small and falls back to a shuffle join per
-    # micro-batch when it isn't.
-    return (
-        probes.join(
-            index,
-            (F.col("_band") == F.col("_cband"))
-            & (F.col("_key") == F.col("_ckey"))
-            & (F.col("_id") != F.col("_cid")),
-        )
-        .withColumn("cosine_sim", F.round(cosine(F.col("_v"), F.col("_cv")), 6))
-        .filter(F.col("cosine_sim") >= threshold)
-        .select(
-            F.col("_id").alias("stream_id"),
-            F.col("_cid").alias("corpus_id"),
-            "cosine_sim",
-        )
-    )
-
-
 def streaming_cms_sink(
     stream_df: DataFrame,
     col: str,
@@ -361,44 +283,6 @@ def read_cms_store(spark, warehouse: str, name: str) -> DataFrame:
     )
 
 
-def streaming_incremental_dedup(
-    stream_docs: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact dedup AT INGESTION: every arriving document's
-    normalization fingerprint probes the STATIC corpus fingerprint
-    index and is emitted with its duplicate verdict — the streaming
-    form of dedup.incremental_dedup_probe (q113), and the gate a
-    continuous ingestion pipeline places before the write.
-
-    Stateless: fingerprinting is a narrow column expression on the
-    stream, the probe is one stream-static LEFT join against the
-    index aggregate — no state store, no watermark, and the corpus
-    index is the persisted artifact at scale (never rebuilt per
-    batch by the planner's stream-static join contract... the index
-    subtree is re-evaluated per micro-batch, so a production run
-    points it at the PRE-BUILT (fingerprint, keep_id) table rather
-    than the raw corpus — same contract as the q24/q76 bucket index
-    in streaming_embedding_near_dup).
-
-    Output stream: (id, fingerprint, dup_of) — dup_of NULL for fresh
-    content, the smallest corpus id holding identical normalized
-    content otherwise.
-    """
-    from ursa_major_choir_etl_spark.operators.dedup import (
-        incremental_dedup_probe,
-    )
-
-    # Delegate to the batch operator: the plan is stream-static-join
-    # compatible as-is, and one definition means the streaming gate
-    # can never silently disagree with the q113 batch decision.
-    return incremental_dedup_probe(
-        stream_docs, corpus, id_col=id_col, text_col=text_col
-    )
-
-
 def streaming_fuzzy_dedup_sink(
     stream_docs: DataFrame,
     corpus: DataFrame,
@@ -414,8 +298,7 @@ def streaming_fuzzy_dedup_sink(
     static corpus shingle-postings index for near-duplicate partners
     (dedup.incremental_jaccard_probe, q138) and its verdicts land in a
     parquet store partitioned by batch_id — the streaming form of the
-    continuous-ingest fuzzy gate, completing the ingestion-dedup pair
-    started by streaming_incremental_dedup (exact fingerprints).
+    continuous-ingest fuzzy gate.
 
     foreachBatch rather than a stream-static join: the probe
     aggregates the ARRIVING side (per-doc sorted shingle arrays),
@@ -426,7 +309,7 @@ def streaming_fuzzy_dedup_sink(
     (batch, corpus), so a replayed batch dynamic-partition-overwrites
     its own batch_id partition with identical rows. At scale the
     corpus argument is the PERSISTED postings/array index, not raw
-    text — same contract as streaming_incremental_dedup.
+    text.
 
     Store rows: (new_id, corpus_id, jaccard, batch_id).
     """
@@ -472,59 +355,13 @@ def streaming_card_sink(
     idempotent, so each batch dynamic-partition-overwrites only its
     own batch_id — a replayed batch replaces, never double-counts.
     The corpus card at any moment is a sum + sketch-union over the
-    store (read_card_store) — no rescan of the stream, ever."""
+    store (q296 reads the sums) — no rescan of the stream, ever."""
     from ursa_major_choir_etl_spark.operators.quality import card_batch_row
 
     def card_batch(batch_df: DataFrame, batch_id: int) -> None:
         _publish(card_batch_row(batch_df), batch_id, warehouse, name)
 
     return _drain(stream_docs, card_batch, checkpoint_dir)
-
-
-def read_card_store(spark, warehouse: str, name: str) -> DataFrame:
-    """Merged dataset card over a streaming card store: exact sums
-    for the additive metrics, HLL-union estimates for the distinct
-    ones. The union merge is order- and batching-insensitive, but a
-    union result and a direct single-shot sketch may differ by a few
-    counts (Datasketches sparse->dense mode transitions), so the
-    distinct metrics are explicitly suffixed _approx and carry the
-    usual HLL error bound (~1.6%/sqrt(2^lgk/2)) — the drain test pins
-    them within 5% of the exact batch truth. Output mirrors
-    quality.dataset_card's tall metric table."""
-    merged = read_parquet_table(spark, warehouse, name).agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.sum("n_en").alias("n_en"),
-        F.sum("q_ppm_sum").alias("q_ppm_sum"),
-        F.sum("n_pii").alias("n_pii"),
-        F.hll_sketch_estimate(F.hll_union_agg("sources_hll"))
-        .alias("n_sources_approx"),
-        F.hll_sketch_estimate(F.hll_union_agg("langs_hll"))
-        .alias("n_langs_approx"),
-        F.hll_sketch_estimate(F.hll_union_agg("fp_hll"))
-        .alias("n_distinct_fp_approx"),
-    )
-    nd = F.col("n_docs").cast("double")
-    metrics = [
-        ("n_docs", F.col("n_docs").cast("double")),
-        ("n_tokens", F.col("n_tokens").cast("double")),
-        ("mean_doc_tokens", F.round(F.col("n_tokens") / nd, 6)),
-        ("n_sources_approx", F.col("n_sources_approx").cast("double")),
-        ("n_langs_predicted_approx", F.col("n_langs_approx").cast("double")),
-        ("pct_en_predicted", F.round(F.col("n_en") / nd, 6)),
-        (
-            "mean_quality",
-            F.round(F.col("q_ppm_sum").cast("double") / (nd * 1_000_000.0), 6),
-        ),
-        (
-            "exact_dup_rate_approx",
-            F.round(1.0 - F.col("n_distinct_fp_approx") / nd, 6),
-        ),
-        ("pii_doc_rate", F.round(F.col("n_pii") / nd, 6)),
-    ]
-    from ursa_major_choir_etl_spark.operators.quality import stack_metrics
-
-    return stack_metrics(merged, metrics)
 
 
 def streaming_rollup_sink(
